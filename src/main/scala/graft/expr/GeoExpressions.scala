@@ -1,5 +1,6 @@
 package graft.expr
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -7,7 +8,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.geo.{Cells, Tiling}
+import graft.geo.{Cells, CentreTree, Tiling}
 
 /** Catalyst codegen scalar kernels (SURVEY.md §2-I). Each expression
   * emits a call to a static forwarder in [[RT]]/[[graft.geo.Cells]]/
@@ -58,39 +59,6 @@ case class CellRingExpr(cell: Expression, k: Expression)
     defineCodeGen(ctx, ev, (a, b) => s"graft.expr.RT.cellRing($a, $b)")
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): CellRingExpr = copy(l, r)
-}
-
-/** cell_disk(cell, k) → ARRAY<BIGINT> of all distinct cells within
-  * Chebyshev distance ≤ k (wrap-aware, pole-clamped). */
-case class CellDiskExpr(cell: Expression, k: Expression)
-    extends BinaryExpression {
-  override def left: Expression = cell
-  override def right: Expression = k
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    RT.cellDisk(a.asInstanceOf[Long], b.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expr.RT.cellDisk($a, $b)")
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): CellDiskExpr = copy(l, r)
-}
-
-/** ancestor_probe(cell, maxLevelExclusive) → ARRAY<BIGINT>: radius-1
-  * disks around the cell's ancestors at every level < maxLevel (the
-  * multi-level kNN fallback probe key set). */
-case class AncestorProbeExpr(cell: Expression, maxLevel: Expression)
-    extends BinaryExpression {
-  override def left: Expression = cell
-  override def right: Expression = maxLevel
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    RT.ancestorProbeCells(a.asInstanceOf[Long], b.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expr.RT.ancestorProbeCells($a, $b)")
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): AncestorProbeExpr = copy(l, r)
 }
 
 /** tile_zxy(lat7, lon7, zoom) → BIGINT packed Web-Mercator z/x/y tile. */
@@ -171,6 +139,28 @@ case class KnnTopExpr(pts: Expression, rels: Array[Long], lats: Array[Long],
     copy(pts = c)
 }
 
+/** knn_tree(pts ARRAY<STRUCT<lat7,lon7>>) → ARRAY<BIGINT>: knn_top's
+  * result, searched in a [[CentreTree]] ([[RT.knnTree]]) — the kNN
+  * kernel above the dense bound. The tree rides as ONE Spark broadcast,
+  * not as plan constants: tasks carry only its handle, and each
+  * generated-code instance resolves the executor's copy once. */
+case class KnnTreeExpr(pts: Expression, tree: Broadcast[CentreTree], k: Int)
+    extends UnaryExpression {
+  override def child: Expression = pts
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override protected def nullSafeEval(a: Any): Any =
+    RT.knnTree(a.asInstanceOf[ArrayData], tree.value, k)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cls = classOf[CentreTree].getName
+    val bRef = ctx.addReferenceObj("knnTreeBc", tree, classOf[Broadcast[_]].getName)
+    val t = ctx.addMutableState(cls, "knnTree", v => s"$v = ($cls) $bRef.value();")
+    defineCodeGen(ctx, ev, c => s"graft.expr.RT.knnTree($c, $t, $k)")
+  }
+  override protected def withNewChildInternal(c: Expression): KnnTreeExpr =
+    copy(pts = c)
+}
+
 /** Column-level API + SQL registration for the kernels. */
 object GeoFunctions {
   import org.apache.spark.sql.graftbridge.{column, expression}
@@ -181,10 +171,6 @@ object GeoFunctions {
     column(CellAncestorExpr(expression(cell), expression(level)))
   def cell_ring(cell: Column, k: Column): Column =
     column(CellRingExpr(expression(cell), expression(k)))
-  def cell_disk(cell: Column, k: Column): Column =
-    column(CellDiskExpr(expression(cell), expression(k)))
-  def ancestor_probe(cell: Column, maxLevel: Column): Column =
-    column(AncestorProbeExpr(expression(cell), expression(maxLevel)))
   def tile_zxy(lat7: Column, lon7: Column, zoom: Column): Column =
     column(TileZXYExpr(expression(lat7), expression(lon7), expression(zoom)))
   def point_in_rings(lon7: Column, lat7: Column, rings: Column): Column =
@@ -198,6 +184,8 @@ object GeoFunctions {
   def knn_top(pts: Column, rels: Array[Long], lats: Array[Long],
       lons: Array[Long], k: Int): Column =
     column(KnnTopExpr(expression(pts), rels, lats, lons, k))
+  def knn_tree(pts: Column, tree: Broadcast[CentreTree], k: Int): Column =
+    column(KnnTreeExpr(expression(pts), tree, k))
   def packed_lat7(p: Column): Column = {
     import org.apache.spark.sql.functions._
     shiftrightunsigned(p, 32) - 900000000L

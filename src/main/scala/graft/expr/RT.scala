@@ -3,7 +3,7 @@ package graft.expr
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.geo.{Cells, Geom, GeomCell}
+import graft.geo.{Cells, CentreTree, Geom, GeomCell}
 
 /** Static runtime kernels referenced from generated (Janino) code — every
   * method here must be Java-callable via the Scala static forwarder.
@@ -64,51 +64,20 @@ object RT {
       if (filled == br.length) br else java.util.Arrays.copyOf(br, filled))
   }
 
-  /** All DISTINCT cells within Chebyshev distance ≤ k (the filled disk,
-    * wrap-aware): x offsets wrap around the antimeridian but are capped
-    * at the level's grid width so no cell repeats (a naive per-ring
-    * union emits the same wrapped cell many times at coarse levels);
-    * y is clamped at the poles. One call replaces the interpreted
-    * explode(flatten(transform(sequence(0,k), ring))) pipeline. */
-  def cellDisk(cell: Long, k: Int): ArrayData = {
-    val l = Cells.level(cell)
-    val n = 1L << l
-    val cx = Cells.x(cell)
-    val cy = Cells.y(cell)
-    val yLo = math.max(0L, cy - k)
-    val yHi = math.min(n - 1, cy + k)
-    val xCount = math.min(2L * k + 1L, n).toInt
-    val out = new Array[Long](((yHi - yLo + 1) * xCount).toInt)
-    var idx = 0
-    var yy = yLo
-    while (yy <= yHi) {
-      var dxi = 0
-      while (dxi < xCount) {
-        var xx = (cx - k + dxi) % n
-        if (xx < 0) xx += n
-        out(idx) = Cells.fromXY(xx, yy, l)
-        idx += 1
-        dxi += 1
-      }
-      yy += 1
+  /** Index kNN kernel: the same top-k as [[knnTop]] — (d2, rel)-ordered
+    * over the multiset of every (point, centre) pair of one url — found
+    * by searching the broadcast [[CentreTree]] once per point instead of
+    * scanning every centre. */
+  def knnTree(pts: ArrayData, tree: CentreTree, k: Int): ArrayData = {
+    val n = pts.numElements()
+    val s = tree.search(n, k)
+    var i = 0
+    while (i < n) {
+      val row = pts.getStruct(i, 2)
+      s.add(row.getLong(0), row.getLong(1))
+      i += 1
     }
-    new GenericArrayData(out)
-  }
-
-  /** Fallback-probe key set: for every level l in [0, maxLevel) the
-    * disk of radius 1 around the cell's ancestor at l. Cell ids embed
-    * their level, so the result joins one multi-level index directly. */
-  def ancestorProbeCells(cell: Long, maxLevelExclusive: Int): ArrayData = {
-    val buf = new scala.collection.mutable.ArrayBuffer[Long](maxLevelExclusive * 9)
-    var l = 0
-    while (l < maxLevelExclusive) {
-      val d = cellDisk(Cells.ancestor(cell, l), 1)
-      var i = 0
-      val n = d.numElements()
-      while (i < n) { buf += d.getLong(i); i += 1 }
-      l += 1
-    }
-    new GenericArrayData(buf.toArray)
+    new GenericArrayData(s.result)
   }
 
   /** Even-odd PIP over ARRAY<ARRAY<BIGINT>> rings (flat [x0,y0,x1,y1,…]

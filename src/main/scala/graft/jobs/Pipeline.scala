@@ -48,8 +48,7 @@ object Pipeline {
     }
 
     val (_, sKnn) = Snapshot.stage(spark, root, "knn",
-      Seq(sAreas.key, s"pages:$nPages",
-        s"knn:${p.knnLevel}:${p.knnMaxRing}")) {
+      Seq(sAreas.key, s"pages:$nPages")) {
       val pts = SpatialJoin.geoparsedPoints(Pages.generate(spark, nPages))
       SpatialJoin.knnCentres(spark, pts, SpatialJoin.centresOf(areasDf), p)
     }

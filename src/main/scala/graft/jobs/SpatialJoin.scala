@@ -1,19 +1,21 @@
 package graft.jobs
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.expr.{GeoFunctions => G}
+import graft.geo.CentreTree
 import graft.jobs.AdminAreas.{AdminArea, CoverRow, CoverRowEx}
 
 /** The flagship pipeline (SURVEY.md J5-J8, north rule): geoparse page
   * text → quadcell encode → multi-level cell equi-join against the
   * compacted admin cover → ray-casting PIP refine for boundary cells →
-  * cell-ring-expansion kNN to nearest admin centre → z/x/y tile
-  * aggregation. Everything is DataFrame + codegen expressions — the
-  * spatial join is a plain Catalyst equi-join (AQE-optimizable), never a
-  * custom physical operator, because the PIP→cell-join rewrite happens
-  * at API level (SURVEY.md §4.3).
+  * exact kNN to the nearest admin centres → z/x/y tile aggregation.
+  * Everything is DataFrame + codegen expressions — the spatial join is a
+  * plain Catalyst equi-join (AQE-optimizable), never a custom physical
+  * operator, because the PIP→cell-join rewrite happens at API level
+  * (SURVEY.md §4.3).
   *
   * Skew (J8): pages concentrate in few cells (cities). `saltBuckets > 0`
   * replicates cover rows of hot cells S ways and spreads their pages by
@@ -23,32 +25,23 @@ object SpatialJoin {
 
   final case class Params(
       coverMaxLevel: Int = 17,
-      knnLevel: Int = 9,
-      knnMaxRing: Int = 3,
       tileZoom: Int = 12,
       saltBuckets: Int = 0,
       hotCellMinPages: Long = 100000L,
-      // kNN centre-index rows above which the broadcast hint is DROPPED
-      // and the probe degrades to a plain shuffle equi-join (AQE picks
-      // shuffled-hash): a forced broadcast() disables Spark's own size
-      // check, and the probe disk is |centres|·(2·maxRing+1)² rows — at
-      // ~10⁶ planet admin centres that is ~49M rows, past the broadcast
-      // comfort zone. 4M rows ≈ 300 MB at ~80 B/row.
-      knnBroadcastMaxRows: Long = 4000000L,
-      // same rule for the containment join's cover side: per-executor
-      // broadcast of the cell cover is the right plan while it fits
-      // (boundary rows carry clipped edges, so rows are wider than the
-      // kNN index's — bound lower), and a planet-detail cover beyond it
-      // degrades to the shuffled equi-join deterministically
+      // the containment join's cover side broadcasts while it fits
+      // (boundary rows carry clipped edges, so rows are wide), and a
+      // planet-detail cover beyond it degrades to the shuffled
+      // equi-join deterministically: a forced broadcast() disables
+      // Spark's own size check
       coverBroadcastMaxRows: Long = 2000000L,
-      // centre sides AT OR UNDER this row count take the DENSE kNN path:
-      // the whole centre table rides the plan as one constant array and
-      // each point scans it in a codegen loop — zero joins, zero index
-      // fan-out, exactly the brute-force definition (so equivalence to
-      // the cell-probe path is by construction). Per-point cost is
-      // O(nCentres), so the bound must stay dimension-table-sized; a
-      // planet's ~10⁶ admin centres exceed it and keep the cell-probe
-      // index path.
+      // centre sides AT OR UNDER this row count take the DENSE kNN
+      // kernel: the whole centre table rides the plan as constant
+      // arrays and each point scans it in a codegen loop — exactly the
+      // brute-force definition. Per-point cost is O(nCentres), so the
+      // bound stays dimension-table-sized; larger centre sides (a
+      // planet's ~10⁶ admin centres) take the broadcast CentreTree
+      // kernel, whose per-point cost is a tree search. Both return the
+      // same rows; the bound only picks the cheaper kernel.
       knnDenseMaxCentres: Long = 1024L)
 
   /** Geoparse: url + packed coordinate; drops pages with no mention.
@@ -168,300 +161,98 @@ object SpatialJoin {
     }
   }
 
-  /** J6: nearest admin centre by cell probing. Distance is exact
-    * integer squared planar L2 in 1e-7° space with antimeridian wrap —
-    * deterministic at any parallelism.
-    *
-    * ONE lazy DAG over the pages (the only driver-side action is a
-    * count of the SMALL centre side, which sizes the broadcast
-    * decision), and ALL cell fan-out lives on the small centre side —
-    * pages never explode
-    * (round 2 exploded a (2·maxRing+1)² disk per page: 10^9 probe rows
-    * at 2·10^7 pages; inverting the disk onto the centres made the
-    * probe one row per page):
-    *  - Probe: each centre explodes its Chebyshev-≤-maxRing cell DISK
-    *    at knnLevel into a broadcast (cell → centre) index; pages
-    *    left-join it on their single kcell → map-side-combined min
-    *    distance; NULL marks pages with no centre in range. Disk
-    *    membership is symmetric (|Δx| wraps, |Δy| clamps identically
-    *    both ways), so the hit set is exactly round 2's.
-    *  - Fallback probe (oceans, sparse regions — rare rows only):
-    *    radius-1 disks around the page cell's ancestors at EVERY
-    *    coarser level in one explode — level 0 sees every centre, so a
-    *    hit is guaranteed when the centre table is nonempty. The index
-    *    carries ONLY levels 0..knnLevel-1 (all `ancestor_probe` emits).
-    *  - Exact gather: pick the gather level whose cell height just
-    *    exceeds the found radius (so kneed ≤ 2), explode that disk
-    *    (≤ 25 cells) per page, join the per-branch level-restricted
-    *    centre index, argmin. Every centre within √d2found sits inside
-    *    the disk at ANY level by the ceil(r/h)+1 ring bound, so the
-    *    level choice (and the clamp below) only affects cost, never
-    *    the result. Main-probe hits have √d2found < (maxRing+1)·h·√5,
-    *    hence glvl ≥ knnLevel − ceil(log2((maxRing+1)√5)); clamping
-    *    glvl into that range lets their index carry only those few
-    *    levels instead of all knnLevel+1 (the round-2 broadcast-width
-    *    problem at 10^6 planet centres). */
-  /** Materialized kNN centre side: checkpointed rows + their count.
-    * The count decides the broadcast-vs-shuffle strategy in
-    * [[knnCentres]] (see `hinted` there); building it once per centre
-    * dataset — e.g. inside [[Prepared]] — lets every page batch reuse
-    * one materialization instead of re-checkpointing + recounting the
-    * centre derivation per call. */
+  /** Materialized kNN centre side: checkpointed rows + their count,
+    * built once per centre dataset — e.g. inside [[Prepared]] — so every
+    * page batch reuses one materialization, one driver-side collect and
+    * one broadcast index instead of redoing them per call. */
   final case class CentreIndex(centres: DataFrame, nCentres: Long) {
-    /** Dense-path centre rows (c_rel, c_lat7, c_lon7) sorted by c_rel,
-      * collected ONCE per index — repeated kNN calls over the same
-      * prepared centre side (every bench pass, every gate sharing the
-      * session prep) reuse the driver-side copy instead of re-running
-      * the collect job. O(nCentres) and only materialized when the
-      * dense path (nCentres ≤ knnDenseMaxCentres) asks for it. */
+    /** Centre rows (c_rel, c_lat7, c_lon7) sorted by c_rel, collected
+      * ONCE per index — repeated kNN calls over the same prepared centre
+      * side (every bench pass, every gate sharing the session prep)
+      * reuse the driver-side copy instead of re-running the collect. */
     lazy val collected: Seq[(Long, Long, Long)] = {
       val spark = centres.sparkSession
       import spark.implicits._
       centres.select(col("relation_id"), col("c_lat7"), col("c_lon7"))
         .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
     }
+
+    /** The exact [[CentreTree]] over [[collected]], built once and
+      * shipped to executors as ONE Spark broadcast (24 B per centre, no
+      * row bound): tasks carry only its handle, never the centre rows
+      * as plan constants. Only built when the tree kernel asks for it
+      * (nCentres > knnDenseMaxCentres). */
+    lazy val tree: Broadcast[CentreTree] =
+      centres.sparkSession.sparkContext.broadcast(CentreTree.build(collected))
   }
   object CentreIndex {
     def of(centres: DataFrame): CentreIndex = {
-      // one cheap count of the SMALL side decides the join strategy
-      // (the same move containmentJoin makes for its cover levels);
-      // the count makes this eager, and checkpointing first makes it
-      // pay for itself — the centre-derivation plan materializes ONCE
-      // instead of re-running under each of the three index builds.
+      // checkpoint first so the count and the later collect read the
+      // centre-derivation plan's output once instead of re-running it
       val m = centres.localCheckpoint()
       CentreIndex(m, m.count())
     }
+  }
+
+  /** J6: the k nearest admin centres per url, EXACT, as (url, rank 1..k,
+    * nn_relation_id). Distance is integer squared planar L2 in 1e-7°
+    * space with antimeridian wrap; ranks order by (d2, relation_id) over
+    * the multiset of every (point, centre) pair of the url — the
+    * brute-force definition the oracles state, deterministic at any
+    * parallelism.
+    *
+    * One plan shape for every centre-side size and every k: points are
+    * grouped per url (the only exchange, carrying (url, lat7, lon7)),
+    * then one codegen kernel call per url ranks the centres. No join,
+    * no page-side fan-out, no cell probing. The kernel depends only on
+    * the centre count:
+    *  - ≤ knnDenseMaxCentres: [[graft.expr.RT.knnTop]] scans the centre
+    *    table shipped as plan-constant arrays;
+    *  - above it: [[graft.expr.RT.knnTree]] searches the
+    *    [[CentreIndex.tree]] broadcast — a static 2-d tree that skips a
+    *    subtree only when its region lies STRICTLY farther than the
+    *    current k-th candidate, so its answer is the scan's answer. */
+  private def knnRanked(points: DataFrame, centreIdx: CentreIndex, p: Params,
+      k: Int): DataFrame = {
+    val kernel: Column => Column =
+      if (centreIdx.nCentres <= p.knnDenseMaxCentres) {
+        val cents = centreIdx.collected
+        val (rels, lats, lons) =
+          (cents.map(_._1).toArray, cents.map(_._2).toArray, cents.map(_._3).toArray)
+        pts => G.knn_top(pts, rels, lats, lons, k)
+      } else {
+        val tree = centreIdx.tree
+        pts => G.knn_tree(pts, tree, k)
+      }
+    points
+      .filter(col("lat7").isNotNull && col("lon7").isNotNull)
+      .groupBy("url")
+      .agg(collect_list(struct(col("lat7"), col("lon7"))).as("pts"))
+      .select(col("url"), posexplode(kernel(col("pts"))))
+      .select(col("url"), (col("pos") + 1).cast("int").as("rank"),
+        col("col").as("nn_relation_id"))
   }
 
   def knnCentres(spark: SparkSession, points: DataFrame,
       centres: DataFrame, p: Params): DataFrame =
     knnCentres(spark, points, CentreIndex.of(centres), p)
 
-  /** Centre rows for the dense path — the memoized [[CentreIndex]]
-    * collect (sorted by c_rel for a deterministic plan constant). Only
-    * touched when nCentres ≤ knnDenseMaxCentres — the same driver-side
-    * O(k) contract as the cover-level facts in [[CoverInfo]]. */
-  private def collectCentres(centreIdx: CentreIndex): Seq[(Long, Long, Long)] =
-    centreIdx.collected
-
-  /** DENSE kNN: per-url top-k over the centre table shipped as codegen
-    * reference arrays — one [[graft.expr.RT.knnTop]] kernel call per
-    * url, no joins, no probe/gather machinery. This IS the brute-force
-    * definition the oracle states ((d2, relation_id)-ordered over the
-    * multiset of every (point, centre) pair), so it is exact at any k;
-    * the per-url aggregation merges duplicate-url points exactly like
-    * the general path's gather groupBy("url"). The only exchange is
-    * that per-url groupBy, carrying (url, lat7, lon7). Used when the
-    * centre side is dimension-table-sized (nCentres ≤
-    * knnDenseMaxCentres). */
-  private def knnDense(points: DataFrame, cents: Seq[(Long, Long, Long)],
-      k: Int): DataFrame = {
-    val rels = cents.map(_._1).toArray
-    val lats = cents.map(_._2).toArray
-    val lons = cents.map(_._3).toArray
-    val top = points
-      .filter(col("lat7").isNotNull && col("lon7").isNotNull)
-      .groupBy("url")
-      .agg(collect_list(struct(col("lat7"), col("lon7"))).as("pts"))
-      .select(col("url"), G.knn_top(col("pts"), rels, lats, lons, k).as("t"))
-    if (k == 1)
-      top.select(col("url"), element_at(col("t"), 1).as("nn_relation_id"))
-    else
-      top.select(col("url"), posexplode(col("t")))
-        .select(col("url"), (col("pos") + 1).cast("int").as("rank"),
-          col("col").as("nn_relation_id"))
-  }
-
+  /** J6 at k = 1: (url, nn_relation_id); no rows when there are no
+    * centres. */
   def knnCentres(spark: SparkSession, points: DataFrame,
-      centreIdx: CentreIndex, p: Params): DataFrame = {
-    require(p.knnLevel >= 1, "knnLevel must be >= 1")
-    if (centreIdx.nCentres > 0 && centreIdx.nCentres <= p.knnDenseMaxCentres)
-      return knnDense(points, collectCentres(centreIdx), k = 1)
-    // each centre-index broadcast hint is kept only while its exploded
-    // row count stays under knnBroadcastMaxRows — beyond that the hint
-    // would force an unbounded broadcast, so the plain equi-join ships
-    // instead and AQE/size-stats pick shuffled-hash. Cost, never
-    // result: every branch joins the same rows either way.
-    val centresM = centreIdx.centres
-    val nCentres = centreIdx.nCentres
-    def hinted(idx: DataFrame, estRows: Long): DataFrame =
-      graft.util.Joins.boundedBroadcast(idx, estRows, p.knnBroadcastMaxRows)
-    val diskWidth = 2L * p.knnMaxRing + 1L
-    val centIdx = knnCentIdx(centresM, p)
-    def d2: Column = knnD2
-    // Probe — centre-side disk index, one row per page on the big side
-    val centDisk = centIdx.withColumn("dcell",
-      explode(G.cell_disk(col("ccell"), lit(p.knnMaxRing))))
-    val pts = points
-      .withColumn("kcell", G.cell_encode(col("lat7"), col("lon7"), lit(p.knnLevel)))
-    // materialized: BOTH downstream branches (main gather + fallback)
-    // filter this frame — without the checkpoint each re-runs the page
-    // scan, the disk join and the probe aggregation from scratch (the
-    // branch split defeats exchange reuse); the persisted form is one
-    // ~40 B row per page, far cheaper than a second source pass
-    val probe = pts
-      .join(hinted(centDisk, nCentres * diskWidth * diskWidth),
-        col("kcell") === col("dcell"), "left_outer")
-      .groupBy("url", "lat7", "lon7", "kcell").agg(min(d2).as("d2found"))
-      .localCheckpoint()
-
-    // Multi-level ancestor indexes, restricted per branch (see Scaladoc)
-    def centLevels(lo: Int, hi: Int) = centIdx.withColumn("acell",
-      explode(transform(sequence(lit(lo), lit(hi)),
-        l => G.cell_ancestor(col("ccell"), l))))
-    // glvl floor provable for main-probe hits: √d2 < (maxRing+1)·h·√5
-    val gMin = math.max(0, p.knnLevel -
-      math.ceil(math.log((p.knnMaxRing + 1) * math.sqrt(5.0)) / math.log(2.0)).toInt)
-    val centGather = centLevels(gMin, p.knnLevel)
-    val centFallback = centLevels(0, p.knnLevel - 1)
-
-    // Fallback probe — all coarser levels at once; cell ids embed their
-    // level so a single multi-level index join covers them all
-    val fbHit = probe.filter(col("d2found").isNull).drop("d2found")
-      .withColumn("rc", explode(G.ancestor_probe(col("kcell"), lit(p.knnLevel))))
-      .join(hinted(centFallback, nCentres * p.knnLevel), col("rc") === col("acell"))
-      .groupBy("url", "lat7", "lon7", "kcell").agg(min(d2).as("d2found"))
-
-    // Exact gather at the radius-matched level, glvl clamped into the
-    // branch's index range: h(glvl) ≥ √d2found ⇒ kneed ≤ 2 ⇒ ≤ 25 cells
-    val latSpan = graft.geo.Cells.LatSpan.toDouble
-    def gather(bounded: DataFrame, idx: DataFrame, lvlLo: Int, lvlHi: Int): DataFrame =
-      bounded
-        .withColumn("glvl", least(greatest(
-          floor(log2(lit(latSpan) / (sqrt(col("d2found")) + 1.0))), lit(lvlLo)),
-          lit(lvlHi)).cast("int"))
-        .withColumn("kneed", (ceil(sqrt(col("d2found")) *
-          pow(lit(2.0), col("glvl")) / latSpan) + 1).cast("int"))
-        .withColumn("rc", explode(G.cell_disk(
-          G.cell_ancestor(col("kcell"), col("glvl")), col("kneed"))))
-        .join(hinted(idx, nCentres * (lvlHi - lvlLo + 1L)), col("rc") === col("acell"))
-        .withColumn("d2v", d2)
-        .groupBy("url").agg(min(struct(col("d2v"), col("c_rel"))).as("b"))
-        .select(col("url"), col("b.c_rel").as("nn_relation_id"))
-
-    // each page is in exactly one branch, so per-branch argmin + union
-    gather(probe.filter(col("d2found").isNotNull), centGather, gMin, p.knnLevel)
-      .union(gather(fbHit, centFallback, 0, p.knnLevel - 1))
-  }
-
-  /** Wrapped-longitude squared distance page↔centre (1e-7° ints; |Δx|
-    * wraps at the antimeridian, |Δy| needs no clamp). Shared by the
-    * k=1 and k>1 kNN paths. */
-  private def knnD2: Column = {
-    val dlat = col("lat7") - col("c_lat7")
-    val dlonRaw = abs(col("lon7") - col("c_lon7"))
-    val dlon = least(dlonRaw, lit(3600000000L) - dlonRaw)
-    dlat * dlat + dlon * dlon
-  }
-
-  private def knnCentIdx(centresM: DataFrame, p: Params): DataFrame =
-    centresM.select(col("relation_id").as("c_rel"),
-        col("c_lat7"), col("c_lon7"))
-      .withColumn("ccell",
-        G.cell_encode(col("c_lat7"), col("c_lon7"), lit(p.knnLevel)))
+      centreIdx: CentreIndex, p: Params): DataFrame =
+    knnRanked(points, centreIdx, p, 1).drop("rank")
 
   def knnCentresK(spark: SparkSession, points: DataFrame,
       centres: DataFrame, p: Params, k: Int): DataFrame =
     knnCentresK(spark, points, CentreIndex.of(centres), p, k)
 
-  /** J6 at rank ≤ k: the k nearest centres per page, EXACT, as
-    * (url, rank 1..k, nn_relation_id). Same three-phase shape as
-    * [[knnCentres]] with the gather radius re-derived from the K-TH
-    * candidate distance:
-    *
-    *  - main probe aggregates the k smallest candidate distances in
-    *    the page's radius-`knnMaxRing` disk; a page whose disk holds
-    *    < k candidates takes the fallback;
-    *  - fallback probes radius-1 disks around ALL coarser ancestors at
-    *    once (level 0 sees every centre, so ≥ k candidates exist
-    *    whenever k ≤ nCentres — required), DEDUPED PER CENTRE first: a
-    *    centre matching at several levels would otherwise repeat its
-    *    distance and silently UNDERCOUNT the k-th;
-    *  - the k-th candidate distance upper-bounds the true k-th
-    *    neighbour distance (k candidates lie within it), so the same
-    *    ceil(r/h)+1 ring bound that made the k=1 gather exact makes
-    *    the gather disk contain the WHOLE top-k; one per-page
-    *    sort+slice ranks it. Every k-th-candidate distance found by
-    *    the main probe still satisfies √d2 < (maxRing+1)·h·√5, so the
-    *    gather-level floor (and the branch-restricted centre indexes)
-    *    carry over unchanged.
-    *
-    * Ties rank by (d2, relation_id) — deterministic in any engine.
-    * Joins keep the boundedBroadcast / plain equi-join discipline of
-    * the k=1 path: nothing cartesian, nothing all-pairs, at any k. */
+  /** J6 at rank ≤ k: (url, rank, nn_relation_id), k rows per url. */
   def knnCentresK(spark: SparkSession, points: DataFrame,
       centreIdx: CentreIndex, p: Params, k: Int): DataFrame = {
-    require(p.knnLevel >= 1, "knnLevel must be >= 1")
     require(k >= 1 && k <= centreIdx.nCentres,
       s"k=$k outside [1, nCentres=${centreIdx.nCentres}]")
-    if (centreIdx.nCentres <= p.knnDenseMaxCentres)
-      return knnDense(points, collectCentres(centreIdx), k)
-    val centresM = centreIdx.centres
-    val nCentres = centreIdx.nCentres
-    def hinted(idx: DataFrame, estRows: Long): DataFrame =
-      graft.util.Joins.boundedBroadcast(idx, estRows, p.knnBroadcastMaxRows)
-    val diskWidth = 2L * p.knnMaxRing + 1L
-    val centIdx = knnCentIdx(centresM, p)
-
-    // k-th smallest candidate distance, null when < k candidates: the
-    // per-page candidate set is disk-bounded (main) / centre-bounded
-    // (fallback), so the collect_list stays small at any corpus scale
-    def kth(grouped: org.apache.spark.sql.RelationalGroupedDataset) =
-      grouped.agg(array_sort(collect_list(col("d2v"))).as("ds"))
-        .withColumn("d2found",
-          when(size(col("ds")) >= k, element_at(col("ds"), k)))
-        .drop("ds")
-
-    val centDisk = centIdx.withColumn("dcell",
-      explode(G.cell_disk(col("ccell"), lit(p.knnMaxRing))))
-    val pts = points.withColumn("kcell",
-      G.cell_encode(col("lat7"), col("lon7"), lit(p.knnLevel)))
-    // materialized for the same two-consumer reason as the k=1 probe
-    val probe = kth(pts
-      .join(hinted(centDisk, nCentres * diskWidth * diskWidth),
-        col("kcell") === col("dcell"), "left_outer")
-      .withColumn("d2v", knnD2)
-      .groupBy("url", "lat7", "lon7", "kcell"))
-      .localCheckpoint()
-
-    def centLevels(lo: Int, hi: Int) = centIdx.withColumn("acell",
-      explode(transform(sequence(lit(lo), lit(hi)),
-        l => G.cell_ancestor(col("ccell"), l))))
-    val gMin = math.max(0, p.knnLevel -
-      math.ceil(math.log((p.knnMaxRing + 1) * math.sqrt(5.0)) / math.log(2.0)).toInt)
-    val centGather = centLevels(gMin, p.knnLevel)
-    val centFallback = centLevels(0, p.knnLevel - 1)
-
-    // fallback: dedup (url, centre) BEFORE the k-th election
-    val fbHit = kth(probe.filter(col("d2found").isNull).drop("d2found")
-      .withColumn("rc", explode(G.ancestor_probe(col("kcell"), lit(p.knnLevel))))
-      .join(hinted(centFallback, nCentres * p.knnLevel), col("rc") === col("acell"))
-      .groupBy("url", "lat7", "lon7", "kcell", "c_rel")
-      .agg(min(knnD2).as("d2v"))
-      .groupBy("url", "lat7", "lon7", "kcell"))
-
-    val latSpan = graft.geo.Cells.LatSpan.toDouble
-    def gatherK(bounded: DataFrame, idx: DataFrame, lvlLo: Int, lvlHi: Int)
-        : DataFrame =
-      bounded
-        .withColumn("glvl", least(greatest(
-          floor(log2(lit(latSpan) / (sqrt(col("d2found")) + 1.0))), lit(lvlLo)),
-          lit(lvlHi)).cast("int"))
-        .withColumn("kneed", (ceil(sqrt(col("d2found")) *
-          pow(lit(2.0), col("glvl")) / latSpan) + 1).cast("int"))
-        .withColumn("rc", explode(G.cell_disk(
-          G.cell_ancestor(col("kcell"), col("glvl")), col("kneed"))))
-        .join(hinted(idx, nCentres * (lvlHi - lvlLo + 1L)), col("rc") === col("acell"))
-        .withColumn("d2v", knnD2)
-        .groupBy("url")
-        .agg(slice(array_sort(collect_list(struct(col("d2v"), col("c_rel")))),
-          1, k).as("top"))
-        .select(col("url"), posexplode(col("top")))
-        .select(col("url"), (col("pos") + 1).cast("int").as("rank"),
-          col("col.c_rel").as("nn_relation_id"))
-
-    gatherK(probe.filter(col("d2found").isNotNull), centGather, gMin, p.knnLevel)
-      .union(gatherK(fbHit, centFallback, 0, p.knnLevel - 1))
+    knnRanked(points, centreIdx, p, k)
   }
 
   /** J7: z/x/y raster-tile aggregation of the join output. */

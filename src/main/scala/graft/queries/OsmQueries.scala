@@ -13,6 +13,21 @@ object OsmQueries {
 
   private val fixture = "/root/reference/tests/fixtures/niue-230612.osm.pbf"
 
+  /** (rows, multi-version ids, invisible rows) of an entity stream in
+    * ONE aggregation pass instead of three driver actions; total on an
+    * empty stream, which yields (0, 0, 0). */
+  private[queries] def streamStats(osm: org.apache.spark.sql.DataFrame)
+      : (Long, Long, Long) = {
+    val stats = osm.groupBy("kind", "id")
+      .agg(count(lit(1)).as("cnt"),
+        sum(when(col("visible"), 0L).otherwise(1L)).as("inv"))
+      .agg(coalesce(sum(col("cnt")), lit(0L)).as("n"),
+        count(when(col("cnt") > 1, 1)).as("multi"),
+        coalesce(sum(col("inv")), lit(0L)).as("invis"))
+      .head()
+    (stats.getLong(0), stats.getLong(1), stats.getLong(2))
+  }
+
   /** The fixture decode, once per session: every gate query here (and
     * diffCount inside them) consumes the stream 2-3×, so the
     * materialized form saves repeated full decodes without weakening
@@ -142,18 +157,8 @@ object OsmQueries {
         val dPbf = Normalize.diffCount(osm, back)
         val dTables = Normalize.diffCount(back,
           Normalize.reassemble(s, Normalize.demux(back)))
-        // one aggregation pass computes all three stream stats (row
-        // count, multi-version ids, invisible rows) instead of three
-        // separate driver actions over the same checkpointed frame
-        val stats = back.toDF().groupBy("kind", "id")
-          .agg(count(lit(1)).as("cnt"),
-            sum(when(col("visible"), 0L).otherwise(1L)).as("inv"))
-          .agg(sum(col("cnt")).as("n"),
-            count(when(col("cnt") > 1, 1)).as("multi"),
-            sum(col("inv")).as("invis"))
-          .head()
-        Seq((stats.getLong(0), stats.getLong(1), stats.getLong(2),
-            dPbf, dTables))
+        val (n, multi, invis) = streamStats(back.toDF())
+        Seq((n, multi, invis, dPbf, dTables))
           .toDF("n_entities", "n_multi_ids", "n_invisible",
             "n_diffs_pbf", "n_diffs_tables")
       },

@@ -72,40 +72,46 @@ class PlanQualitySpec extends AnyFunSuite {
     df.collect() // and the fused stage must actually compile + run
   }
 
-  test("kNN general path has no cartesian/nested-loop join and broadcasts the centre index") {
+  /** The kNN tree kernel's plan: no join at all, the per-url
+    * aggregation as the only exchange, and the centre index referenced
+    * as the memoized broadcast — never as plan-constant arrays. */
+  private def assertTreeKnnPlan(k: Int): Unit = {
+    import graft.expr.{KnnTopExpr, KnnTreeExpr}
     val pts = spark.range(1000)
       .select(col("id").cast("string").as("url"),
         (col("id") % 1000000L).as("lat7"), (col("id") % 2000000L).as("lon7"))
     val centres = spark.range(20)
       .select(col("id").as("relation_id"),
         (col("id") * 7777L).as("c_lat7"), (col("id") * 9999L).as("c_lon7"))
-    // knnDenseMaxCentres = 0 forces the cell-probe index path — the
-    // plan shape a planet-sized centre table gets
-    val knn = SpatialJoin.knnCentres(spark, pts, centres,
-      SpatialJoin.Params(knnDenseMaxCentres = 0L))
-    val plan = knn.queryExecution.executedPlan.toString()
-    assert(!plan.contains("CartesianProduct") &&
-      !plan.contains("BroadcastNestedLoopJoin"),
-      s"kNN must never degrade to an all-pairs join:\n$plan")
-    assert(plan.contains("BroadcastHashJoin"),
-      "centre index must broadcast — it is small by construction")
+    // knnDenseMaxCentres = 0 forces the tree kernel — the plan a
+    // planet-sized centre table gets
+    val idx = SpatialJoin.CentreIndex.of(centres)
+    val p = SpatialJoin.Params(knnDenseMaxCentres = 0L)
+    def knn() =
+      if (k == 1) SpatialJoin.knnCentres(spark, pts, idx, p)
+      else SpatialJoin.knnCentresK(spark, pts, idx, p, k)
+    val df = knn()
+    val plan = df.queryExecution.executedPlan.toString()
+    assert(!plan.contains("Join"), s"tree kNN (k=$k) must be join-free:\n$plan")
+    assert("Exchange".r.findAllMatchIn(plan).size == 1 &&
+      plan.contains("Exchange hashpartitioning(url"),
+      s"the per-url aggregation must be the only exchange (k=$k):\n$plan")
+    def kernels(d: org.apache.spark.sql.DataFrame) =
+      d.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case e: KnnTreeExpr => e.tree.id
+        case _: KnnTopExpr => -1L
+      }))
+    // one broadcast, built once per index and reused by the next call
+    assert(kernels(df) == Seq(idx.tree.id) && kernels(knn()) == Seq(idx.tree.id))
+    assert(df.count() == 1000L * k)
   }
 
-  test("kNN k>1 general path stays equi-join shaped and broadcasts the centre index") {
-    val pts = spark.range(1000)
-      .select(col("id").cast("string").as("url"),
-        (col("id") % 1000000L).as("lat7"), (col("id") % 2000000L).as("lon7"))
-    val centres = spark.range(20)
-      .select(col("id").as("relation_id"),
-        (col("id") * 7777L).as("c_lat7"), (col("id") * 9999L).as("c_lon7"))
-    val knn = SpatialJoin.knnCentresK(spark, pts, centres,
-      SpatialJoin.Params(knnDenseMaxCentres = 0L), k = 3)
-    val plan = knn.queryExecution.executedPlan.toString()
-    assert(!plan.contains("CartesianProduct") &&
-      !plan.contains("BroadcastNestedLoopJoin"),
-      s"kNN k>1 must never degrade to an all-pairs join:\n$plan")
-    assert(plan.contains("BroadcastHashJoin"),
-      "centre index must broadcast — it is small by construction")
+  test("kNN general path has no cartesian/nested-loop join and broadcasts the centre index") {
+    assertTreeKnnPlan(k = 1)
+  }
+
+  test("kNN k>1 general path plans no join and broadcasts the centre index") {
+    assertTreeKnnPlan(k = 3)
   }
 
   test("kNN dense path (dimension-sized centre table) plans no join at all") {
@@ -136,67 +142,45 @@ class PlanQualitySpec extends AnyFunSuite {
       .select(col("id").as("relation_id"),
         ((col("id") * 7777777L) % 1800000001L - 900000000L).as("c_lat7"),
         ((col("id") * 9999991L) % 3600000001L - 1800000000L).as("c_lon7"))
-    val dense1 = SpatialJoin.knnCentres(spark, pts, centres,
-      SpatialJoin.Params(knnLevel = 6, knnMaxRing = 2))
+    val dense1 = SpatialJoin.knnCentres(spark, pts, centres, SpatialJoin.Params())
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     val gen1 = SpatialJoin.knnCentres(spark, pts, centres,
-      SpatialJoin.Params(knnLevel = 6, knnMaxRing = 2, knnDenseMaxCentres = 0L))
+      SpatialJoin.Params(knnDenseMaxCentres = 0L))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     assert(dense1 == gen1 && dense1.nonEmpty)
     val dense3 = SpatialJoin.knnCentresK(spark, pts, centres,
-      SpatialJoin.Params(knnLevel = 6, knnMaxRing = 2), k = 3)
+      SpatialJoin.Params(), k = 3)
       .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
     val gen3 = SpatialJoin.knnCentresK(spark, pts, centres,
-      SpatialJoin.Params(knnLevel = 6, knnMaxRing = 2, knnDenseMaxCentres = 0L), k = 3)
+      SpatialJoin.Params(knnDenseMaxCentres = 0L), k = 3)
       .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
     assert(dense3 == gen3 && dense3.size == 3 * dense1.size)
   }
 
-  test("kNN probe disk DROPS the broadcast hint above the row bound (degrades to shuffle, not OOM)") {
+  test("kNN at 10⁵ centres stays join-free and matches brute force on a sample") {
+    // a planet has ~10⁶ admin centres; the tree kernel's plan carries
+    // only the broadcast handle, whatever the centre count
     val pts = spark.range(1000)
       .select(col("id").cast("string").as("url"),
         (col("id") % 1000000L).as("lat7"), (col("id") % 2000000L).as("lon7"))
-    // 10⁵ centres × (2·3+1)² disk = 4.9M index rows > the 4M default
-    // bound: the probe-disk join must ship WITHOUT the broadcast hint
-    // (a planet has ~10⁶ admin centres; a forced broadcast() there
-    // bypasses Spark's size check and OOMs the executors)
     val centres = spark.range(100000)
       .select(col("id").as("relation_id"),
         ((col("id") * 7777L) % 800000000L).as("c_lat7"),
         ((col("id") * 9999L) % 1600000000L).as("c_lon7"))
-    // the probe executes EAGERLY inside knnCentres (checkpointed for
-    // its two consumers), so its join no longer appears in the
-    // returned frame's plan — capture the probe's EXECUTED plan via a
-    // listener instead (stronger: this is the plan that actually ran)
-    val plans = new java.util.concurrent.CopyOnWriteArrayList[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = plans.add(qe.executedPlan.toString())
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
+    val knn = SpatialJoin.knnCentres(spark, pts, centres, SpatialJoin.Params())
+    val plan = knn.queryExecution.executedPlan.toString()
+    assert(!plan.contains("Join"), s"kNN must stay join-free at 10⁵ centres:\n$plan")
+    val got = knn.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got.size == 1000)
+    val cents = centres.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    for (id <- 0L until 1000L by 10L) {
+      val (lat, lon) = (id % 1000000L, id % 2000000L)
+      val best = cents.map { case (rel, clat, clon) =>
+        val dlon = math.min(math.abs(lon - clon), 3600000000L - math.abs(lon - clon))
+        ((lat - clat) * (lat - clat) + dlon * dlon, rel)
+      }.min._2
+      assert(got(id.toString) == best, s"url $id")
     }
-    spark.listenerManager.register(listener)
-    val plan = try {
-      SpatialJoin.knnCentres(spark, pts, centres, SpatialJoin.Params())
-      val deadline = System.currentTimeMillis() + 10000
-      var found: Option[String] = None
-      while (found.isEmpty && System.currentTimeMillis() < deadline) {
-        import scala.jdk.CollectionConverters._
-        found = plans.asScala.find(_.contains("dcell"))
-        if (found.isEmpty) Thread.sleep(50)
-      }
-      found.getOrElse(fail("probe plan not captured by the listener"))
-    } finally spark.listenerManager.unregister(listener)
-    val probeLines = plan.linesIterator.filter(_.contains("dcell")).toSeq
-    assert(probeLines.exists(l =>
-      l.contains("SortMergeJoin") || l.contains("ShuffledHashJoin")),
-      s"probe-disk join must degrade to a shuffle equi-join:\n$plan")
-    assert(!probeLines.exists(_.contains("BroadcastHashJoin")),
-      s"probe-disk broadcast must be dropped at 4.9M index rows:\n$plan")
-    assert(!plan.contains("CartesianProduct") &&
-      !plan.contains("BroadcastNestedLoopJoin"), s"plan:\n$plan")
   }
 
   test("ANN embedding plan stays a bucket equi-join (no cartesian/nested-loop)") {

@@ -87,40 +87,6 @@ class GeoExpressionsSpec extends AnyFunSuite {
     }
   }
 
-  test("cell_disk == distinct union of rings 0..k, including wrap at coarse levels") {
-    import graft.expr.RT
-    for {
-      level <- Seq(0, 1, 2, 6, 12)
-      k <- Seq(0, 1, 3, 6)
-      (lat, lon) <- Seq((0L, 0L), (899999999L, 1799999999L), (-900000000L, -1800000000L))
-    } {
-      val cell = Cells.encode(lat, lon, level)
-      val disk = {
-        val d = RT.cellDisk(cell, k)
-        (0 until d.numElements()).map(d.getLong).toSet
-      }
-      val rings = (0 to k).flatMap(j => Cells.ring(cell, j)).toSet
-      assert(disk == rings, s"level=$level k=$k cell=$cell")
-      // no duplicates in the disk itself
-      val d2 = RT.cellDisk(cell, k)
-      assert(d2.numElements() == disk.size, s"disk must be duplicate-free level=$level k=$k")
-    }
-  }
-
-  test("ancestor_probe covers radius-1 disks of every coarser level") {
-    import graft.expr.RT
-    val cell = Cells.encode(123456789L, -987654321L, 9)
-    val probe = {
-      val p = RT.ancestorProbeCells(cell, 9)
-      (0 until p.numElements()).map(p.getLong).toSet
-    }
-    val expect = (0 until 9).flatMap { l =>
-      val anc = Cells.ancestor(cell, l)
-      Cells.ring(anc, 0) ++ Cells.ring(anc, 1)
-    }.toSet
-    assert(probe == expect)
-  }
-
   test("cell_ring explodes to join-ready candidates") {
     val df = Seq((0L, 0L)).toDF("lat7", "lon7")
       .withColumn("cell", G.cell_encode($"lat7", $"lon7", lit(10)))

@@ -182,18 +182,15 @@ class SpatialJoinSpec extends AnyFunSuite {
     }
   }
 
-  test("kNN shuffle-degraded path (broadcast bound exceeded) is output-identical") {
+  test("kNN tree kernel is output-identical to the dense kernel") {
     val base = SpatialJoin.run(spark, pagesDf, areas)
-    // knnBroadcastMaxRows = 0 forces EVERY centre-index join onto the
-    // shuffle_hash path — the plan the engine degrades to at planet
-    // centre counts; cost may change, the result must not
-    // (knnDenseMaxCentres = 0 first forces the general path at all —
-    // the default base run takes the dense path, so this doubles as a
-    // dense-vs-general cross-path identity check)
-    val degraded = SpatialJoin.run(spark, pagesDf, areas,
-      SpatialJoin.Params(knnBroadcastMaxRows = 0L, knnDenseMaxCentres = 0L))
+    // knnDenseMaxCentres = 0 forces the broadcast-tree kernel — the
+    // one a planet's centre count gets; the default base run takes the
+    // dense kernel, so this is a cross-kernel identity check
+    val tree = SpatialJoin.run(spark, pagesDf, areas,
+      SpatialJoin.Params(knnDenseMaxCentres = 0L))
     val a = base.knn.collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    val b = degraded.knn.collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    val b = tree.knn.collect().map(r => (r.getString(0), r.getLong(1))).toSet
     assert(a == b)
     assert(a.nonEmpty)
   }
