@@ -75,13 +75,7 @@ object Cli {
         case "import" :: in :: out :: Nil =>
           val entities = PbfRead.read(spark, in)
           val db = Normalize.demux(entities)
-          for ((name, df) <- Seq(
-            "nodes" -> db.nodes, "node_tags" -> db.nodeTags,
-            "ways" -> db.ways, "way_tags" -> db.wayTags,
-            "way_nodes" -> db.wayNodes, "relations" -> db.relations,
-            "relation_tags" -> db.relationTags,
-            "relation_members" -> db.relationMembers,
-            "users" -> db.users, "changesets" -> db.changesets))
+          for ((name, df) <- db.tables)
             df.write.mode("overwrite").parquet(s"$out/$name")
           // dump metadata — the analog of the reference's dump
           // (transaction id, timestamp) used to default replication
@@ -94,10 +88,7 @@ object Cli {
             s"""{"importedAtMs":${System.currentTimeMillis()},"maxChangeset":$maxChangeset}""")
           println(s"[graft] imported $in -> $out (10 tables)")
         case "export" :: in :: out :: Nil =>
-          def t(n: String) = spark.read.parquet(s"$in/$n")
-          val db = Normalize.ApiDb(t("nodes"), t("node_tags"), t("ways"),
-            t("way_tags"), t("way_nodes"), t("relations"), t("relation_tags"),
-            t("relation_members"), t("users"), t("changesets"))
+          val db = Normalize.ApiDb.readParquet(spark, in)
           // G5: default replication params from the import-time dump meta
           val meta = {
             val p = java.nio.file.Paths.get(in, "_dump_meta.json")
@@ -135,21 +126,11 @@ object Cli {
             })
           }
           val db = graft.norm.PgCopy.readApiDb(spark, in, usersLayout)
-          for ((name, df) <- Seq(
-            "nodes" -> db.nodes, "node_tags" -> db.nodeTags,
-            "ways" -> db.ways, "way_tags" -> db.wayTags,
-            "way_nodes" -> db.wayNodes, "relations" -> db.relations,
-            "relation_tags" -> db.relationTags,
-            "relation_members" -> db.relationMembers,
-            "users" -> db.users, "changesets" -> db.changesets))
+          for ((name, df) <- db.tables)
             df.write.mode("overwrite").parquet(s"$out/$name")
           println(s"[graft] imported COPY dump $in -> $out (10 tables)")
         case "export-pgdump" :: in :: out :: Nil =>
-          def t(n: String) = spark.read.parquet(s"$in/$n")
-          graft.norm.PgCopy.writeApiDb(Normalize.ApiDb(t("nodes"), t("node_tags"),
-            t("ways"), t("way_tags"), t("way_nodes"), t("relations"),
-            t("relation_tags"), t("relation_members"), t("users"),
-            t("changesets")), out)
+          graft.norm.PgCopy.writeApiDb(Normalize.ApiDb.readParquet(spark, in), out)
           println(s"[graft] exported COPY dump $in -> $out")
         case "apply-osc" :: in :: oscDir :: out :: Nil =>
           val updated = graft.streaming.Replication.applyDiffs(spark,

@@ -15,8 +15,6 @@ import scala.collection.mutable.ArrayBuffer
   */
 object Cover {
 
-  final case class CoverCell(cell: Long, full: Boolean)
-
   /** Detailed boundary cell for the localized refine path (GeomCell):
     * `edges` = only the polygon edges intersecting this cell;
     * `cornerInside` = containment of the cell's SW corner; `fallback`
@@ -63,15 +61,11 @@ object Cover {
   }
 
   /** Cover restricted to one seed cell (union over seeds == full cover). */
-  def coverFrom(rings: Array[Array[Long]], seed: Long, maxLevel: Int,
-      maxCells: Int = 65536): Array[CoverCell] =
-    coverImpl(rings, Array(seed), maxLevel, maxCells)
-      .map(c => CoverCell(c.cell, c.full))
-
   def coverDetailedFrom(rings: Array[Array[Long]], seed: Long, maxLevel: Int,
       maxCells: Int = 65536): Array[CoverCellEx] =
     coverImpl(rings, Array(seed), maxLevel, maxCells)
 
+  /** Build the whole cover in one call (single-task path). */
   def coverDetailed(rings: Array[Array[Long]], maxLevel: Int,
       maxCells: Int = 65536): Array[CoverCellEx] =
     coverImpl(rings, startCells(rings, maxLevel), maxLevel, maxCells)
@@ -102,12 +96,6 @@ object Cover {
     (for (cy <- cyLo to cyHi; cx <- cxLo to cxHi)
       yield Cells.fromXY(cx, cy, startLevel)).toArray
   }
-
-  /** Build the whole cover (single-task path; tests + small polygons). */
-  def cover(rings: Array[Array[Long]], maxLevel: Int,
-      maxCells: Int = 65536): Array[CoverCell] =
-    coverImpl(rings, startCells(rings, maxLevel), maxLevel, maxCells)
-      .map(c => CoverCell(c.cell, c.full))
 
   /** `maxCells` caps the output (safety valve for degenerate geometry:
     * when exceeded, remaining partial cells are emitted un-split —

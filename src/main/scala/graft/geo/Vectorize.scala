@@ -212,7 +212,7 @@ object Vectorize {
       .select(col("la"), col("lb"))
     val superComp = graft.util.LabelProp.components(spark, superEdges,
       nodes = Some(localComp.select(col("lcomp").as("node")).distinct()),
-      debugTag = "vec", shufflePartitions = Some(8))
+      shufflePartitions = Some(8))
     val comp = localComp
       .join(superComp, localComp("lcomp") === superComp("node"))
       .select(col("cell"), col("comp"))

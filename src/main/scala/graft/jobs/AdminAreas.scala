@@ -35,8 +35,6 @@ object AdminAreas {
       centreLat7: Option[Long], centreLon7: Option[Long],
       complete: Boolean)
 
-  final case class CoverRow(relationId: Long, cell: Long, full: Boolean)
-
   /** Detailed cover row: clipped edges + SW-corner parity enable the
     * localized refine (GeomCell) — no polygon geometry in the hot path. */
   final case class CoverRowEx(relationId: Long, cell: Long, full: Boolean,
@@ -273,8 +271,6 @@ object AdminAreas {
             col("l.chainId") =!= col("r.chainId")).isEmpty
         if (!anyAdjacency) openCount = 0 else openCount = newOpen
       } else openCount = newOpen
-      if (sys.env.contains("GRAFT_STITCH_DEBUG"))
-        println(f"[stitch] round=$round open=$openCount t=${System.nanoTime() / 1e9}%.1f")
       round += 1
     }
     (chains.filter(_.closed), chains.filter(c => !c.closed))
@@ -364,17 +360,10 @@ object AdminAreas {
   /** J4: compacted cell cover per complete admin polygon. Two-stage
     * fan-out: each polygon first emits seed sub-quadrants, which are
     * shuffled so a mega-polygon's cover is built by MANY tasks instead of
-    * one straggler (Amdahl guard for country-level relations). */
-  def coverTable(spark: SparkSession, areas: Dataset[AdminArea],
-      maxLevel: Int): Dataset[CoverRow] = {
-    import spark.implicits._
-    coverTableDetailed(spark, areas, maxLevel)
-      .map(c => CoverRow(c.relationId, c.cell, c.full))
-  }
-
-  /** Detailed variant: boundary cells carry clipped edges + corner
-    * parity so the join-side refine never touches full polygon rings
-    * (except the rare `fallback` cells). */
+    * one straggler (Amdahl guard for country-level relations). Boundary
+    * cells carry clipped edges + corner parity so the join-side refine
+    * never touches full polygon rings (except the rare `fallback`
+    * cells). */
   def coverTableDetailed(spark: SparkSession, areas: Dataset[AdminArea],
       maxLevel: Int): Dataset[CoverRowEx] = {
     import spark.implicits._

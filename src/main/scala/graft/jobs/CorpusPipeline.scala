@@ -63,8 +63,7 @@ object CorpusPipeline {
       jaccKeepMilli)
     val edges = pairs.select(col("d1").as("a"), col("d2").as("b"))
       .union(pairs.select(col("d2").as("a"), col("d1").as("b")))
-    val losers = graft.util.LabelProp
-      .components(spark, edges, debugTag = "neardup")
+    val losers = graft.util.LabelProp.components(spark, edges)
       .filter(col("comp") =!= col("node"))
       .select(col("node").as("doc_id"))
     docs.join(losers.hint("shuffle_hash"), Seq("doc_id"), "left_anti")

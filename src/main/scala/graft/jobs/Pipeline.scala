@@ -43,8 +43,8 @@ object Pipeline {
     }
 
     val (_, sTiles) = Snapshot.stage(spark, root, "tiles",
-      Seq(sJoin.key, s"zoom:${p.tileZoom}")) {
-      SpatialJoin.tiles(joinedDf, p.tileZoom)
+      Seq(sJoin.key, s"zoom:${SpatialJoin.TileZoom}")) {
+      SpatialJoin.tiles(joinedDf, SpatialJoin.TileZoom)
     }
 
     val (_, sKnn) = Snapshot.stage(spark, root, "knn",

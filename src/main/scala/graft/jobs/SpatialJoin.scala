@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.expr.{GeoFunctions => G}
 import graft.geo.CentreTree
-import graft.jobs.AdminAreas.{AdminArea, CoverRow, CoverRowEx}
+import graft.jobs.AdminAreas.{AdminArea, CoverRowEx}
 
 /** The flagship pipeline (SURVEY.md J5-J8, north rule): geoparse page
   * text → quadcell encode → multi-level cell equi-join against the
@@ -17,17 +17,19 @@ import graft.jobs.AdminAreas.{AdminArea, CoverRow, CoverRowEx}
   * operator, because the PIP→cell-join rewrite happens at API level
   * (SURVEY.md §4.3).
   *
-  * Skew (J8): pages concentrate in few cells (cities). `saltBuckets > 0`
-  * replicates cover rows of hot cells S ways and spreads their pages by
-  * hash(url) — output-identical to the unsalted plan (asserted in spec).
+  * Skew (J8): pages concentrate in few cells (cities). On the broadcast
+  * path a hot cell costs nothing extra; on the shuffled path AQE's
+  * skew-join split divides an oversized join partition at runtime from
+  * the shuffle's own map statistics (measured faster than static
+  * hot-cell salting: plans/r11/salting_vs_aqe.txt).
   */
 object SpatialJoin {
 
+  /** Zoom of the z/x/y tile aggregation (J7). */
+  val TileZoom = 12
+
   final case class Params(
       coverMaxLevel: Int = 17,
-      tileZoom: Int = 12,
-      saltBuckets: Int = 0,
-      hotCellMinPages: Long = 100000L,
       // the containment join's cover side broadcasts while it fits
       // (boundary rows carry clipped edges, so rows are wide), and a
       // planet-detail cover beyond it degrades to the shuffled
@@ -104,34 +106,12 @@ object SpatialJoin {
     val keyed = pts.withColumn("jcell", explode(array(
       levels.map(l => G.cell_ancestor(col("pcell"), lit(l))): _*)))
 
-    // the cover is checkpointed by prepare(), so the bound's count is a
-    // cheap cached-block scan; page-side stats after the explode are
-    // Generate-underestimated, so without the explicit bound Spark
-    // could pick either side at any true size
-    val nCover = ci.nRows
-    def boundedCover(df: DataFrame): DataFrame =
-      graft.util.Joins.boundedBroadcast(df, nCover, p.coverBroadcastMaxRows)
-
-    val cand =
-      if (p.saltBuckets <= 1)
-        keyed.join(boundedCover(coverDf), col("jcell") === col("cell"))
-      else {
-        // hot join keys measured exactly (one cheap agg), then salted
-        val hot = keyed.groupBy("jcell").count()
-          .filter(col("count") >= p.hotCellMinPages)
-          .select(col("jcell").as("cell")).withColumn("hot", lit(true))
-        val coverS = coverDf.join(broadcast(hot), Seq("cell"), "left_outer")
-          .withColumn("salt", explode(when(col("hot").isNotNull,
-            sequence(lit(0), lit(p.saltBuckets - 1))).otherwise(array(lit(0)))))
-          .drop("hot")
-        val keyedS = keyed.join(broadcast(hot), keyed("jcell") === hot("cell"), "left_outer")
-          .drop("cell")
-          .withColumn("salt", when(col("hot").isNotNull,
-            pmod(xxhash64(col("url")), lit(p.saltBuckets)).cast("int")).otherwise(lit(0)))
-          .drop("hot")
-        keyedS.join(boundedCover(coverS), col("jcell") === col("cell") &&
-          keyedS("salt") === coverS("salt"))
-      }
+    // page-side stats after the explode are Generate-underestimated, so
+    // without the explicit bound on the cover's row count Spark could
+    // pick either side at any true size
+    val cand = keyed.join(
+      graft.util.Joins.boundedBroadcast(coverDf, ci.nRows, p.coverBroadcastMaxRows),
+      col("jcell") === col("cell"))
 
     // branches recompute the candidate chain — a narrow all-codegen
     // pipeline from the source scan (no shuffle); streaming passes beat
@@ -255,17 +235,20 @@ object SpatialJoin {
     knnRanked(points, centreIdx, p, k)
   }
 
-  /** J7: z/x/y raster-tile aggregation of the join output. */
-  def tiles(joined: DataFrame, zoom: Int): DataFrame =
-    joined
+  /** J7: z/x/y raster-tile aggregation of the join output, as (z, x, y,
+    * relation_id, n_pages). `leadingKeys` (the streaming path's
+    * event-time window) group ahead of the tile and lead the output. */
+  def tiles(joined: DataFrame, zoom: Int, leadingKeys: Column*): DataFrame = {
+    val counts = joined
       .withColumn("t", G.tile_zxy(col("lat7"), col("lon7"), lit(zoom)))
-      .groupBy(col("t"), col("relation_id"))
+      .groupBy(leadingKeys ++ Seq(col("t"), col("relation_id")): _*)
       .agg(count(lit(1)).as("n_pages"))
-      .select(
+    counts.select(counts.columns.toSeq.take(leadingKeys.length).map(counts.col) ++ Seq(
         lit(zoom).as("z"),
         col("t").bitwiseAND(lit((1L << zoom) - 1)).as("x"),
         shiftrightunsigned(col("t").bitwiseAND(lit((1L << 58) - 1)), zoom).as("y"),
-        col("relation_id"), col("n_pages"))
+        col("relation_id"), col("n_pages")): _*)
+  }
 
   /** End-to-end: pages + assembled areas → per-url join rows + tiles.
     * `knn` stays a thunk so callers that only want the containment
@@ -337,6 +320,6 @@ object SpatialJoin {
     val joined = containmentJoin(spark, pts, prep.cover, prep.polygons, p,
       Some(prep.coverInfo))
     new Outputs(joined, () => knnCentres(spark, pts, prep.centreIdx, p),
-      tiles(joined, p.tileZoom))
+      tiles(joined, TileZoom))
   }
 }

@@ -18,7 +18,24 @@ object Normalize {
       nodes: DataFrame, nodeTags: DataFrame,
       ways: DataFrame, wayTags: DataFrame, wayNodes: DataFrame,
       relations: DataFrame, relationTags: DataFrame, relationMembers: DataFrame,
-      users: DataFrame, changesets: DataFrame)
+      users: DataFrame, changesets: DataFrame) {
+    /** The 10 tables under their apidb names, in field order. */
+    def tables: Seq[(String, DataFrame)] = ApiDb.TableNames.zip(Seq(nodes,
+      nodeTags, ways, wayTags, wayNodes, relations, relationTags,
+      relationMembers, users, changesets))
+  }
+
+  object ApiDb {
+    private val TableNames: Seq[String] = Seq("nodes", "node_tags", "ways",
+      "way_tags", "way_nodes", "relations", "relation_tags",
+      "relation_members", "users", "changesets")
+
+    /** The 10 tables as parquet directories named after them in `dir`. */
+    def readParquet(spark: SparkSession, dir: String): ApiDb = {
+      val t = TableNames.map(n => spark.read.parquet(s"$dir/$n"))
+      ApiDb(t(0), t(1), t(2), t(3), t(4), t(5), t(6), t(7), t(8), t(9))
+    }
+  }
 
   /** B1 type dispatch + B2-B4 explodes + D3 users dedup + D4 changeset
     * synthesis. Every table keeps (id, version) so history rows survive

@@ -1214,8 +1214,7 @@ object TextOps {
         val pairs = verifiedPairs(s, d).select("d1", "d2")
         val edges = pairs.select(col("d1").as("a"), col("d2").as("b"))
           .union(pairs.select(col("d2").as("a"), col("d1").as("b")))
-        graft.util.LabelProp.components(s, edges, debugTag = "cc",
-            shufflePartitions = Some(8))
+        graft.util.LabelProp.components(s, edges, shufflePartitions = Some(8))
           .select(col("node").as("doc_id"), col("comp").as("cluster_id"))
           .orderBy("doc_id")
       },

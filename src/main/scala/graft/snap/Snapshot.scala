@@ -1,8 +1,12 @@
 package graft.snap
 
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{Callable, ExecutionException, Executors}
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Minimal Iceberg-style snapshot/manifest layer (SURVEY.md J9, §7.3):
@@ -74,23 +78,10 @@ object Snapshot {
       val (_, metrics) = try graft.util.Progress.tracked(spark) {
         df.write.mode("overwrite").parquet(tmp)
       } finally spark.sparkContext.setJobDescription(null)
-      // per-partition metrics from parquet footers (no extra job).
-      // Footer opens are independent ~5-20 ms IO round trips; read them
-      // concurrently so a many-file stage doesn't serialize them on the
-      // driver (measured: the 5-stage corpus chain pays this per stage)
+      // per-partition metrics from parquet footers (no extra job)
       val parts = f.listStatus(new Path(tmp)).map(_.getPath)
         .filter(p => p.getName.startsWith("part-")).sortBy(_.getName)
-      val hconf = spark.sparkContext.hadoopConfiguration
-      val counts = java.util.Arrays.stream(parts).parallel().map[(String, Long)] { p =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(p, hconf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        val n = r.getRecordCount
-        r.close()
-        p.getName -> n
-      }.toArray(new java.util.function.IntFunction[Array[(String, Long)]] {
-        def apply(n: Int) = new Array[(String, Long)](n)
-      })
+      val counts = footerRowCounts(parts, spark.sparkContext.hadoopConfiguration)
       if (f.exists(new Path(dataPath))) f.delete(new Path(dataPath), true)
       require(f.rename(new Path(tmp), new Path(dataPath)), s"rename failed: $tmp")
       val wallMs = (System.nanoTime() - t0) / 1000000
@@ -122,6 +113,39 @@ object Snapshot {
       (spark.read.schema(df.schema).parquet(dataPath),
         StageResult(key, dataPath, total, counts.length, wallMs, resumed = false, inputs))
     }
+  }
+
+  /** Threads reading footers for one stage commit. */
+  private val FooterReadThreads = 8
+
+  /** (file name, row count) of each parquet part, from its footer.
+    * Footer opens are independent ~5-20 ms IO round trips, so a
+    * many-file stage reads them concurrently (measured: the 5-stage
+    * corpus chain pays this per stage) on a pool this call owns and
+    * shuts down, never the JVM-wide common pool. Each read gets its own
+    * copy of `hconf`: a Hadoop Configuration is not safe to share
+    * across threads. A failed read names its part file. */
+  private[snap] def footerRowCounts(parts: Array[Path],
+      hconf: Configuration): Array[(String, Long)] = {
+    val pool = Executors.newFixedThreadPool(
+      math.max(1, math.min(FooterReadThreads, parts.length)))
+    try {
+      val reads = parts.map { p =>
+        pool.submit(new Callable[(String, Long)] {
+          def call(): (String, Long) = {
+            val r = ParquetFileReader.open(
+              HadoopInputFile.fromPath(p, new Configuration(hconf)))
+            try p.getName -> r.getRecordCount finally r.close()
+          }
+        })
+      }
+      parts.zip(reads).map { case (p, read) =>
+        try read.get() catch {
+          case e: ExecutionException =>
+            throw new java.io.IOException(s"parquet footer read failed: $p", e.getCause)
+        }
+      }
+    } finally pool.shutdownNow()
   }
 
   /** Remove superseded stage versions: for each stage NAME keep the

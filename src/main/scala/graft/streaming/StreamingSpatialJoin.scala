@@ -22,11 +22,6 @@ object StreamingSpatialJoin {
       prep: SpatialJoin.Prepared,
       p: SpatialJoin.Params = SpatialJoin.Params(),
       windowLen: String = "7 days", watermark: String = "14 days"): DataFrame = {
-    // salting measures hot keys with a batch action — meaningless on an
-    // unbounded stream (skew there is a per-micro-batch property AQE
-    // already handles at the shuffle)
-    require(p.saltBuckets <= 1,
-      "saltBuckets is a batch-only knob; streams pre-partition instead")
     val pts = pages
       .select(col("url"), col("warc_ts"), G.geoparse_packed(col("text")).as("pk"))
       .filter(col("pk").isNotNull)
@@ -34,16 +29,9 @@ object StreamingSpatialJoin {
         G.packed_lat7(col("pk")).as("lat7"), G.packed_lon7(col("pk")).as("lon7"))
     val joined = SpatialJoin.containmentJoin(spark, pts, prep.cover,
       prep.polygons, p, Some(prep.coverInfo))
-    joined
-      .withColumn("t", G.tile_zxy(col("lat7"), col("lon7"), lit(p.tileZoom)))
-      .withWatermark("warc_ts", watermark)
-      .groupBy(window(col("warc_ts"), windowLen), col("t"), col("relation_id"))
-      .agg(count(lit(1)).as("n_pages"))
-      .select(col("window.start").as("w_start"),
-        lit(p.tileZoom).as("z"),
-        col("t").bitwiseAND(lit((1L << p.tileZoom) - 1)).as("x"),
-        shiftrightunsigned(col("t").bitwiseAND(lit((1L << 58) - 1)),
-          p.tileZoom).as("y"),
-        col("relation_id"), col("n_pages"))
+    SpatialJoin.tiles(joined.withWatermark("warc_ts", watermark),
+        SpatialJoin.TileZoom, window(col("warc_ts"), windowLen))
+      .withColumn("window", col("window.start"))
+      .withColumnRenamed("window", "w_start")
   }
 }

@@ -17,22 +17,20 @@ object LabelProp {
 
   def components(spark: SparkSession, edges: DataFrame,
       nodes: Option[DataFrame] = None, maxRounds: Int = 50,
-      debugTag: String = "cc",
       shufflePartitions: Option[Int] = None): DataFrame = {
     // every round executes EAGERLY (checkpoint + count), so a scoped
     // shuffle-partition override applies cleanly and pays off — tens of
     // near-empty reducers per round are pure task overhead on the small
     // graphs the callers pass; the returned frame is materialized
     // before the conf restores
-    shufflePartitions.fold(componentsImpl(spark, edges, nodes, maxRounds, debugTag)) {
+    shufflePartitions.fold(componentsImpl(spark, edges, nodes, maxRounds)) {
       p => Scoped.shufflePartitions(spark, p)(
-        componentsImpl(spark, edges, nodes, maxRounds, debugTag))
+        componentsImpl(spark, edges, nodes, maxRounds))
     }
   }
 
   private def componentsImpl(spark: SparkSession, edges: DataFrame,
-      nodes: Option[DataFrame], maxRounds: Int,
-      debugTag: String): DataFrame = {
+      nodes: Option[DataFrame], maxRounds: Int): DataFrame = {
     // Dataset.localCheckpoint: materializes ONCE (stats-truncating,
     // lineage-cutting) and stays in Tungsten InternalRow format
     val edgesM = edges.toDF("a", "b").localCheckpoint()
@@ -79,8 +77,6 @@ object LabelProp {
           labels.schema)
       converged = changed == 0L
       round += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"[$debugTag] round $round changed=$changed t=${System.nanoTime() / 1e9}%.2f")
     }
     // a chain with component diameter > the round cap would emit WRONG
     // component ids — fail loudly instead (raise the cap or switch to

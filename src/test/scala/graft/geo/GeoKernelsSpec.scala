@@ -133,7 +133,7 @@ class GeoKernelsSpec extends AnyFunSuite {
       val seed = r.nextLong(300L); val n = 6 + r.nextInt(19)
       val ring = starPolygon(500000000L, 100000000L, n, seed)
       val poly = toJts(ring)
-      val cov = Cover.cover(Array(ring), maxLevel = 14)
+      val cov = Cover.coverDetailed(Array(ring), maxLevel = 14)
       assert(cov.nonEmpty)
       val cellSet = cov.map(_.cell).toSet
       // full cells: center must be inside (JTS oracle)

@@ -61,7 +61,7 @@ class AdminAreasSpec extends AnyFunSuite {
 
   test("cover table: country cover contains the centre's cell; full cells nest") {
     val ds = spark.createDataset(areas.toSeq)
-    val cov = AdminAreas.coverTable(spark, ds, maxLevel = 14).collect()
+    val cov = AdminAreas.coverTableDetailed(spark, ds, maxLevel = 14).collect()
     assert(cov.nonEmpty)
     val country = areas.find(_.relationId == 1558556L).get
     val countryCells = cov.filter(_.relationId == 1558556L).map(_.cell).toSet

@@ -210,15 +210,4 @@ class SpatialJoinSpec extends AnyFunSuite {
     assert(!degraded.joined.queryExecution.executedPlan.toString
       .contains("BroadcastHashJoin"), "degraded cover join must not broadcast")
   }
-
-  test("salted join output is identical to unsalted (J8)") {
-    val base = SpatialJoin.run(spark, pagesDf, areas)
-    val salted = SpatialJoin.run(spark, pagesDf, areas,
-      SpatialJoin.Params(saltBuckets = 8, hotCellMinPages = 10L))
-    val a = base.joined.select("url", "relation_id").collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSet
-    val b = salted.joined.select("url", "relation_id").collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(a == b)
-  }
 }

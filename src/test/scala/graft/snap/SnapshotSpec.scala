@@ -73,6 +73,27 @@ class SnapshotSpec extends AnyFunSuite {
     assert(tree.get("schema").get("fields").size() == 2)
   }
 
+  test("footer row counts cover every part; an unreadable part fails naming its file") {
+    import org.apache.hadoop.fs.Path
+    val dir = Files.createTempDirectory("graft-snap-footer")
+    spark.range(100).repartition(3).write.parquet(dir.resolve("ok").toString)
+    val parts = Files.list(dir.resolve("ok")).iterator()
+    var ok = Seq.empty[Path]
+    while (parts.hasNext) {
+      val p = parts.next()
+      if (p.getFileName.toString.startsWith("part-")) ok :+= new Path(p.toString)
+    }
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val counts = Snapshot.footerRowCounts(ok.toArray, hconf)
+    assert(counts.map(_._1).toSeq == ok.map(_.getName))
+    assert(counts.map(_._2).sum == 100)
+    val bad = dir.resolve("part-99999.parquet")
+    Files.write(bad, "not parquet".getBytes)
+    val e = intercept[java.io.IOException](
+      Snapshot.footerRowCounts((ok :+ new Path(bad.toString)).toArray, hconf))
+    assert(e.getMessage.contains("part-99999.parquet"), e.getMessage)
+  }
+
   test("vacuum drops superseded versions, keeps lineage-referenced keys, resume still works") {
     val dir = Files.createTempDirectory("graft-snap-vac").toString
     // chain: base(v1) -> derived(base1); then base re-staged with new
