@@ -42,7 +42,7 @@ import graft.synth.Pages
   */
 object Cli {
 
-  private def session(): SparkSession = {
+  private[graft] def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val s = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
@@ -69,7 +69,7 @@ object Cli {
 
   def main(args: Array[String]): Unit = {
     val spark = session()
-    val (_, metrics) = graft.util.Progress.tracked(spark) {
+    val (_, metrics) = graft.util.Obs.span(spark, s"graft ${args.mkString(" ")}") {
       val (positional, opts) = splitOpts(args.toList)
       positional match {
         case "import" :: in :: out :: Nil =>
@@ -210,7 +210,7 @@ object Cli {
           sys.exit(2)
       }
     }
-    println(s"[graft] metrics: ${metrics.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(" ")}")
+    println(s"[graft] metrics: ${metrics.totals.map { case (k, v) => s"$k=$v" }.mkString(" ")}")
     spark.stop()
   }
 }

@@ -167,12 +167,8 @@ object Normalize {
     * weakening of an equality witness); a side with a duplicate key
     * counts as a mismatch unless both sides duplicate identically,
     * which for valid OSM streams (unique (kind,id,version)) coincides
-    * with the join formulation. [[diffFrame]] exposes the pre-count
-    * mismatch frame so dev tooling can dump its plan. */
-  def diffCount(a: Dataset[OsmEntity], b: Dataset[OsmEntity]): Long =
-    diffFrame(a, b).count()
-
-  def diffFrame(a: Dataset[OsmEntity], b: Dataset[OsmEntity]): DataFrame = {
+    * with the join formulation. */
+  def diffCount(a: Dataset[OsmEntity], b: Dataset[OsmEntity]): Long = {
     def canon(ds: Dataset[OsmEntity], side: Int): DataFrame = ds.toDF().select(
       col("kind"), col("id"), col("version"), lit(side).as("side"),
       struct(col("visible"), col("lat7"), col("lon7"), col("tsMillis"),
@@ -189,5 +185,6 @@ object Normalize {
         max(when(col("side") === 1, col("payload"))).as("qb"))
       .filter(col("na") =!= col("nb") || col("pa") =!= col("pb") ||
         col("qa") =!= col("qb"))
+      .count()
   }
 }

@@ -1,11 +1,16 @@
 package graft.norm
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
+import scala.util.{Failure, Try}
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.expr.PgTextFunctions
 import graft.model.OsmKind
+import graft.util.Obs
 
 /** PostgreSQL COPY-text interop for the 10 apidb tables (SURVEY.md
   * A5/A6 as surveyed): the reference's on-disk interchange is a pg_dump
@@ -156,20 +161,14 @@ object PgCopy {
     * The ten table writes are independent Spark jobs submitted
     * CONCURRENTLY (job submission is thread-safe): on a big cluster
     * small dimension tables no longer serialize behind the node table,
-    * and locally the per-job scheduling gaps overlap. */
+    * and locally the per-job scheduling gaps overlap. They run on a
+    * pool this call creates and shuts down, so its threads start in the
+    * caller's span; each write is a span of its own. */
   def writeApiDb(db: Normalize.ApiDb, dir: String): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val jobs = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+    val jobs = scala.collection.mutable.ArrayBuffer.empty[Callable[Unit]]
     def enqueue(df: => DataFrame, path: String, table: String): Unit =
       jobs += { () =>
-        // descriptions are thread-local: each concurrent write labels
-        // its own job in the UI/listeners (guide §1.5)
-        val sc = df.sparkSession.sparkContext
-        sc.setJobDescription(s"pgcopy write $table")
-        try writeTable(df, path, table)
-        finally sc.setJobDescription(null)
+        Obs.span(df.sparkSession, s"pgcopy write $table")(writeTable(df, path, table))
       }
     enqueue(db.nodes.select(col("node_id"),
       col("lat7").cast("int").as("latitude"),
@@ -237,12 +236,17 @@ object PgCopy {
       col("min_lon7").cast("int").as("min_lon"), col("max_lon7").cast("int").as("max_lon"),
       col("closed_at_ms").as("closed_at"),
       col("num_changes").cast("int")), s"$dir/changesets", "changesets")
-    // await EVERY job before returning (or rethrowing): a fail-fast
-    // unwind would leave the other writes still running in background
-    // threads, racing any caller retry against this same dir
-    val results = jobs.toSeq.map(j => Future(j()))
-      .map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-    results.collectFirst { case scala.util.Failure(e) => throw e }
+    val pool = Executors.newFixedThreadPool(jobs.length)
+    try {
+      // await EVERY job before returning (or rethrowing): a fail-fast
+      // unwind would leave the other writes still running in background
+      // threads, racing any caller retry against this same dir
+      val results = jobs.toSeq.map(pool.submit(_)).map(f => Try(f.get()))
+      results.collectFirst {
+        case Failure(e: ExecutionException) => throw e.getCause
+        case Failure(e) => throw e
+      }
+    } finally pool.shutdownNow()
   }
 
   /** COPY text dump dir → canonical tables. apidb stores the author on

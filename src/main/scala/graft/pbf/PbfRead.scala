@@ -4,6 +4,7 @@ import java.io.DataInputStream
 import java.util.zip.Inflater
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.model.{OsmEntity, OsmKind, OsmMember, OsmTag}
@@ -64,32 +65,34 @@ object PbfRead {
     * files up to a few hundred MB; a planet file has ~9M frames, so
     * [[scanFramesDistributed]] takes over above
     * [[DistributedScanThreshold]] (the same block-split + resync trick
-    * FileInputFormat uses for text). */
+    * FileInputFormat uses for text). A frame whose header or data runs
+    * past the end of the file fails here, naming the file and the
+    * frame's offset, instead of as a bare EOF on an executor. */
   def scanFrames(spark: SparkSession, path: String): Seq[BlobPtr] = {
-    val in = new DataInputStream(hadoopOpen(spark, path))
+    val p = new Path(path)
+    val fs = FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
+    val fileLen = fs.getFileStatus(p).getLen
+    val in = fs.open(p)
     val out = scala.collection.mutable.ArrayBuffer.empty[BlobPtr]
     var offset = 0L
+    def truncated(what: String) = new java.io.IOException(
+      s"truncated PBF frame at offset $offset in $path: $what runs past " +
+        s"the end of the file ($fileLen bytes)")
     try {
-      while (true) {
-        val headerLen =
-          try in.readInt()
-          catch { case _: java.io.EOFException => return out.toSeq }
+      while (offset < fileLen) {
+        if (offset + 4 > fileLen) throw truncated("the header length")
+        val headerLen = in.readInt()
+        if (headerLen < 0 || offset + 4 + headerLen > fileLen)
+          throw truncated(s"the $headerLen-byte BlobHeader")
         val headerBytes = new Array[Byte](headerLen)
         in.readFully(headerBytes)
-        val p = new Proto(headerBytes)
-        var blobType = ""
-        var dataLen = 0
-        while (p.hasMore) {
-          p.readKey() match {
-            case (1, 2) => blobType = p.readString()
-            case (3, 0) => dataLen = p.readVarint().toInt
-            case (_, w) => p.skip(w)
-          }
-        }
+        val (blobType, dataLen) = parseBlobHeader(headerBytes).getOrElse(throw
+          new java.io.IOException(s"invalid BlobHeader at offset $offset in $path"))
         val dataOffset = offset + 4 + headerLen
+        if (dataOffset + dataLen > fileLen) throw truncated(s"the $dataLen-byte blob")
         out += BlobPtr(path, dataOffset, dataLen, blobType)
-        in.skipBytes(dataLen)
         offset = dataOffset + dataLen
+        in.seek(offset)
       }
       out.toSeq
     } finally in.close()
@@ -309,19 +312,9 @@ object PbfRead {
       // directory form: the header frame lives in the first part
       val in = new DataInputStream(hadoopOpen(spark, partFiles(spark, path).head._1))
       try {
-        val headerLen = in.readInt()
-        val headerBytes = new Array[Byte](headerLen)
+        val headerBytes = new Array[Byte](in.readInt())
         in.readFully(headerBytes)
-        val p = new Proto(headerBytes)
-        var blobType = ""
-        var dataLen = 0
-        while (p.hasMore) {
-          p.readKey() match {
-            case (1, 2) => blobType = p.readString()
-            case (3, 0) => dataLen = p.readVarint().toInt
-            case (_, w) => p.skip(w)
-          }
-        }
+        val (blobType, dataLen) = parseBlobHeader(headerBytes).getOrElse(("", 0))
         require(blobType == "OSMHeader",
           s"not an OSM PBF file (first blob is '$blobType'): $path")
         val data = new Array[Byte](dataLen)
@@ -629,12 +622,23 @@ object PbfRead {
         val hp = new Path(path)
         val fs = FileSystem.get(hp.toUri, bc.value.value)
         val in = fs.open(hp)
-        val sorted = ps.sortBy(_.offset)
-        sorted.iterator.flatMap { ptr =>
-          val data = new Array[Byte](ptr.dataLen)
-          in.readFully(ptr.offset, data)
-          decodeBlock(inflateBlob(data))
-        } ++ { in.close(); Iterator.empty }
+        // closed after the run's last blob, or at task end if the task
+        // fails or stops early
+        var open = true
+        def close(): Unit = if (open) { open = false; in.close() }
+        TaskContext.get().addTaskCompletionListener[Unit](_ => close())
+        ps.sortBy(_.offset).iterator.flatMap { ptr =>
+          // one blob decodes eagerly, so any read, inflate or decode
+          // failure surfaces here and can name its file and offset
+          try {
+            val data = new Array[Byte](ptr.dataLen)
+            in.readFully(ptr.offset, data)
+            decodeBlock(inflateBlob(data)).toVector
+          } catch {
+            case e: Exception => throw new java.io.IOException(
+              s"corrupt PBF blob at offset ${ptr.offset} in $path: $e", e)
+          }
+        } ++ { close(); Iterator.empty }
       }
     }
   }

@@ -90,15 +90,7 @@ object TextOps {
     * side is corpus-sized (one row per distinct shingle) — never
     * broadcastable, hence the forced co-partitioned shuffled-hash
     * join. */
-  private def substrDupStarts(s: SparkSession, d: String): DataFrame =
-    substrDupStartsFrame(s, d)
-      // materialized once: feeds two consumers (covered + starts)
-      .localCheckpoint()
-
-  /** The lazy plan behind [[substrDupStarts]], exposed pre-checkpoint
-    * so dev tooling can dump it (the checkpoint collapses it to a Scan
-    * ExistingRDD in every downstream explain). */
-  private[graft] def substrDupStartsFrame(s: SparkSession, d: String): DataFrame = {
+  private def substrDupStarts(s: SparkSession, d: String): DataFrame = {
     val sh = corpus(s, d)
       .select(col("doc_id"),
         posexplode(TextFunctions.word_gram_hashes(lower(col("text")), 5)))
@@ -109,6 +101,8 @@ object TextOps {
       .agg(min("occ").as("first_occ"), count(lit(1)).as("n_occ"))
     sh.join(first.hint("shuffle_hash"), "h")
       .filter(col("n_occ") > 1 && col("occ") =!= col("first_occ"))
+      // materialized once: feeds two consumers (covered + starts)
+      .localCheckpoint()
   }
 
   /** DuckDB replay of [[substrDupStarts]]: CTEs c/tk/sh/fo/dup with

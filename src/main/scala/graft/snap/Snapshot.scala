@@ -74,10 +74,9 @@ object Snapshot {
       val df = compute // bind once: `compute` is by-name
       val tmp = s"$root/_tmp-$key-${System.nanoTime()}"
       // A11/J9: executor metrics for this stage land in the manifest
-      spark.sparkContext.setJobDescription(s"snapshot stage $name")
-      val (_, metrics) = try graft.util.Progress.tracked(spark) {
+      val (_, metrics) = graft.util.Obs.span(spark, s"snapshot stage $name") {
         df.write.mode("overwrite").parquet(tmp)
-      } finally spark.sparkContext.setJobDescription(null)
+      }
       // per-partition metrics from parquet footers (no extra job)
       val parts = f.listStatus(new Path(tmp)).map(_.getPath)
         .filter(p => p.getName.startsWith("part-")).sortBy(_.getName)
@@ -97,7 +96,7 @@ object Snapshot {
       inputs.foreach(lin.add)
       man.put("wallMs", wallMs).put("totalRows", total)
       val met = man.putObject("metrics")
-      metrics.toSeq.sorted.foreach { case (k, v) => met.put(k, v) }
+      metrics.totals.foreach { case (k, v) => met.put(k, v) }
       val fl = man.putArray("files")
       counts.foreach { case (p, n) =>
         fl.addObject().put("path", p).put("rows", n) }

@@ -36,17 +36,3 @@ class QueriesSmokeSpec extends AnyFunSuite {
     }
   }
 }
-
-class ProgressSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
-
-  test("progress listener accumulates input/shuffle/cpu metrics (A11)") {
-    val (n, metrics) = graft.util.Progress.tracked(spark) {
-      spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-        .groupBy("l_returnflag").count().collect().length
-    }
-    assert(n > 0)
-    assert(metrics("recordsRead") >= 6000L)
-    assert(metrics("executorCpuNs") > 0L)
-  }
-}

@@ -177,4 +177,18 @@ class PgCopySpec extends AnyFunSuite {
       ds.map(e => e.copy(tags = e.tags.sortBy(t => (t.k, t.v))))
     assert(Normalize.diffCount(canonTags(osm), canonTags(back)) == 0)
   }
+
+  test("writeApiDb → readApiDb keeps every table's row count (history fixture)") {
+    val db = Normalize.demux(graft.queries.OsmQueries.historyFixture(spark))
+    val dir = java.nio.file.Files.createTempDirectory("graft-test-pgcopy-hist").toString
+    // the writes run on pool threads, each in its own span nested in
+    // the caller's
+    val (_, m) = graft.util.Obs.span(spark, "export")(PgCopy.writeApiDb(db, dir))
+    assert(m.ledger.map(_.description).toSet ==
+      db.tables.map { case (t, _) => s"pgcopy write $t" }.toSet)
+    val back = PgCopy.readApiDb(spark, dir).tables.map { case (t, df) => t -> df.count() }
+    val want = db.tables.map { case (t, df) => t -> df.count() }
+    assert(back == want)
+    assert(want.forall(_._2 > 0), want)
+  }
 }

@@ -224,4 +224,43 @@ class PbfReadSpec extends AnyFunSuite {
     assert(ents.map(e => (e.id, e.lat7, e.lon7)) ==
       List((5L, Some(-71L), Some(-30L))))
   }
+
+  /** A single-file PBF of the history fixture, its frames, and a
+    * scratch path for a damaged copy. */
+  private def damagedCopy(tag: String): (Array[Byte], Seq[PbfRead.BlobPtr], String) = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft-test-pbf-$tag")
+    val good = dir.resolve("good.osm.pbf").toString
+    PbfWrite.write(spark, graft.queries.OsmQueries.historyFixture(spark), good,
+      singleFile = true)
+    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(good))
+    (bytes, PbfRead.scanFrames(spark, good), dir.resolve("bad.osm.pbf").toString)
+  }
+
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
+  test("a file truncated inside its last blob fails on the driver, naming file and frame offset") {
+    val (bytes, frames, bad) = damagedCopy("cut")
+    assert(frames.length >= 2)
+    val last = frames.last
+    val prev = frames(frames.length - 2)
+    val lastStart = prev.offset + prev.dataLen
+    java.nio.file.Files.write(java.nio.file.Paths.get(bad),
+      bytes.take((last.offset + last.dataLen / 2).toInt))
+    val e = intercept[java.io.IOException](PbfRead.read(spark, bad))
+    assert(e.getMessage.contains(bad) && e.getMessage.contains(s"offset $lastStart"),
+      e.getMessage)
+  }
+
+  test("a flipped zlib checksum byte fails the read, naming file and blob offset") {
+    val (bytes, frames, bad) = damagedCopy("adler")
+    val last = frames.filter(_.blobType == "OSMData").last
+    // the Blob's last field is zlib_data, whose last 4 bytes are Adler-32
+    val i = (last.offset + last.dataLen - 1).toInt
+    bytes(i) = (bytes(i) ^ 0xff).toByte
+    java.nio.file.Files.write(java.nio.file.Paths.get(bad), bytes)
+    val e = intercept[Exception](PbfRead.read(spark, bad).count())
+    val msg = messages(e)
+    assert(msg.contains(bad) && msg.contains(s"corrupt PBF blob at offset ${last.offset}"), msg)
+  }
 }

@@ -71,6 +71,11 @@ class SnapshotSpec extends AnyFunSuite {
     assert(tree.get("stage").asText == name)
     assert(tree.get("totalRows").asLong == 10)
     assert(tree.get("schema").get("fields").size() == 2)
+    // the stage write's span totals (A11): Spark's write tracker counts
+    // the rows it wrote
+    val metrics = tree.get("metrics")
+    assert(metrics.get("jobs").asLong >= 1 && metrics.get("tasks").asLong >= 1)
+    assert(metrics.get("recordsWritten").asLong == 10)
   }
 
   test("footer row counts cover every part; an unreadable part fails naming its file") {
