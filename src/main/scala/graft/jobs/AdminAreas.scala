@@ -1,25 +1,37 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable
+import scala.util.Try
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.geo.{Cover, Geom, Stitch}
 import graft.model.{OsmEntity, OsmKind}
+import graft.streaming.Replication
+import graft.util.{Joins, Obs}
 
 /** Admin-boundary assembly (SURVEY.md J1-J4): select admin relations,
   * stitch member ways into closed rings, normalize winding, and build
   * compacted cell covers.
   *
-  * Stitching is HYBRID: each (relation, role) group small enough for
-  * one task (in practice ~all of them — see [[DefaultLocalMaxSegs]])
-  * is stitched locally by [[graft.geo.Stitch]] inside one
-  * `flatMapGroups` — one shuffle, no driver rounds. Oversized groups
-  * take an ITERATIVE DATAFRAME SELF-JOIN (north star: "rather than a
-  * port of the Rust relation assembler"): deterministic random-mate
-  * matching on shared endpoint node ids converges in O(log w) rounds
-  * without any task holding a whole relation. Member ORDER is never
-  * consulted — the reference treats member order as insignificant
+  * Stitching is LOCAL, one task per relation: the located nodes of its
+  * member ways (way members ⋈ way nodes ⋈ nodes), its admin_centre node
+  * and one header row are grouped by `relation_id` in ONE shuffle. That
+  * task builds the per-way chains, stitches each role with
+  * [[graft.geo.Stitch]], makes the rings canonical and flags failures,
+  * and emits the finished [[AdminArea]]: no driver rounds. A role too
+  * big for one stitch (more than `localMaxSegs` open chains or
+  * [[LocalMaxCoordLongs]] coordinates) hands its chains to an ITERATIVE
+  * DATAFRAME SELF-JOIN instead (north star: "rather than a port of the
+  * Rust relation assembler"): deterministic random-mate matching on
+  * shared endpoint node ids converges in O(log w) rounds without any
+  * task stitching the whole ring. Member ORDER is never consulted — the
+  * reference treats member order as insignificant
   * (export-test/main.rs:113-127).
   */
 object AdminAreas {
@@ -68,139 +80,118 @@ object AdminAreas {
         coalesce(tagVal("name"), lit("")).as("name"),
         col("members"))
 
-  /** Initial chains: one per (relation, role, member way), with node-id
-    * endpoints and coordinate payload. */
-  def initialChains(spark: SparkSession, osm: Dataset[OsmEntity],
-      admin: DataFrame): Dataset[Chain] = {
-    import spark.implicits._
-    val memberWays = admin
-      .select(col("relation_id"), explode(col("members")).as("m"))
-      .filter(col("m.mtype") === OsmKind.Way &&
-        (col("m.role") === "outer" || col("m.role") === "inner" || col("m.role") === ""))
-      .select(col("relation_id"),
-        when(col("m.role") === "inner", "inner").otherwise("outer").as("role"),
-        col("m.ref").as("way_id"))
-      .distinct()
-    val wayNodes = latestVisible(osm, OsmKind.Way)
-      .select(col("id").as("way_id"), posexplode(col("refs")).as(Seq("seq", "node_id")))
-    val nodes = latestVisible(osm, OsmKind.Node)
-      .select(col("id").as("node_id"), col("lat7"), col("lon7"))
-    memberWays
-      .join(wayNodes, "way_id")
-      .join(nodes, "node_id")
-      .groupBy("relation_id", "role", "way_id")
-      .agg(array_sort(collect_list(struct(col("seq"), col("node_id"),
-        col("lon7"), col("lat7")))).as("pts"))
-      .as[(Long, String, Long, Seq[(Int, Long, Long, Long)])]
-      .map { case (rel, role, wayId, pts) =>
-        val coords = pts.flatMap(p => Seq(p._3, p._4))
-        Chain(rel, role, wayId, pts.head._2, pts.last._2, coords,
-          nWays = 1, closed = pts.length >= 2 && pts.head._2 == pts.last._2)
-      }
-  }
-
-  /** Max open segments per (relation, role) routed through the LOCAL
-    * stitcher; bigger groups take the iterative distributed join. At
-    * planet scale the largest admin relations have ~10^4 member ways,
-    * so in practice ~all groups stitch locally in one task and the
-    * iterative path is the safety net for pathological inputs. */
+  /** Max open chains per (relation, role) stitched inside the
+    * relation's group task; bigger roles take the iterative distributed
+    * join. At planet scale the largest admin relations have ~10^4 member
+    * ways, so in practice ~all roles stitch locally and the iterative
+    * path is the safety net for pathological inputs. */
   val DefaultLocalMaxSegs: Int = 16384
-  private val LocalMaxCoordLongs = 8000000L // ~64 MB payload per group
+  private val LocalMaxCoordLongs = 8000000L // ~64 MB payload per role
 
-  /** Hybrid stitcher (J2). Returns (closed, failed) chains.
-    *
-    * Small (relation, role) groups — by segment count AND coordinate
-    * payload — are stitched locally inside one `flatMapGroups` task by
-    * [[graft.geo.Stitch]]: one shuffle total, no driver-side rounds.
-    * Oversized groups take the iterative random-mate DataFrame
-    * self-join ([[assembleIterative]]), whose O(log w) rounds don't
-    * need any single task to hold a whole relation. The split is a
-    * deterministic function of group size, so output is
-    * partitioning-invariant. */
-  def assemble(spark: SparkSession, initial: Dataset[Chain],
-      maxRounds: Int = 64,
-      localMaxSegs: Int = DefaultLocalMaxSegs): (Dataset[Chain], Dataset[Chain]) = {
-    import spark.implicits._
-    val all = truncateChains(spark, initial)
-    val closedInit = all.filter(_.closed)
-    val open = all.filter(c => !c.closed)
-    // oversized group keys: one row per pathological (relation, role)
-    // after partial aggregation. The split runs as semi/anti JOINS, so
-    // nothing key-proportional ever lands on the driver — real OSM
-    // data has a handful of such keys (broadcast), adversarial input
-    // with millions degrades to a shuffled-hash split, not a driver
-    // OOM. Only the COUNT (strategy pick + empty fast path) reaches
-    // the driver.
-    val bigKeysDf = open.toDF()
-      .groupBy(col("relationId"), col("role"))
-      .agg(count(lit(1)).as("n"), sum(size(col("coords"))).as("w"))
-      .filter(col("n") > localMaxSegs || col("w") > LocalMaxCoordLongs)
-      .select(col("relationId"), col("role"))
-      .localCheckpoint()
-    val nBig = bigKeysDf.count()
-    val bigKeysHinted =
-      graft.util.Joins.boundedBroadcast(bigKeysDf, nBig, 1000000L)
-    val small =
-      if (nBig == 0L) open
-      else open.toDF()
-        .join(bigKeysHinted, Seq("relationId", "role"), "left_anti")
-        .as[Chain]
-    val localOutRaw = small
-      .groupByKey(c => (c.relationId, c.role))
-      .flatMapGroups { (key: (Long, String), it: Iterator[Chain]) =>
-        val (rel, role) = key
-        val chains = it.toArray
-        // <2 vertices can never merge: mark failed (the iterative path
-        // leaves them open; Stitch would drop them silently)
-        val (segs, degenerate) = chains.partition(_.coords.length >= 4)
-        val ws = segs.map { c =>
-          val nv = c.coords.length / 2
-          val ids = new Array[Long](nv)
-          // Stitch matches on endpoint ids only; interior ids get
-          // non-colliding sentinels
-          ids(0) = c.aNode; ids(nv - 1) = c.bNode
-          var i = 1
-          while (i < nv - 1) { ids(i) = Long.MinValue + i; i += 1 }
-          val xs = new Array[Long](nv)
-          val ys = new Array[Long](nv)
-          var k = 0
-          while (k < nv) { xs(k) = c.coords(2 * k); ys(k) = c.coords(2 * k + 1); k += 1 }
-          Stitch.WaySeg(c.chainId, ids, xs, ys)
-        }
-        val res = Stitch.stitch(ws.toIndexedSeq)
-        val rings = res.rings.iterator.zipWithIndex.map { case (flat, idx) =>
-          Chain(rel, role, idx.toLong, 0L, 0L, flat.toSeq, nWays = 0, closed = true)
-        }
-        val failed = (res.failedWayIds.iterator ++ degenerate.iterator.map(_.chainId))
-          .map(id => Chain(rel, role, id, 0L, 0L, Nil, nWays = 1, closed = false))
-        rings ++ failed
-      }
-    // materialize once: the closed/failed branches (and build()'s joins
-    // over them) would otherwise re-run the stitch shuffle per consumer
-    val localOut = truncateChains(spark, localOutRaw)
-    if (nBig == 0L) {
-      (closedInit.union(localOut.filter(_.closed)),
-        localOut.filter(c => !c.closed))
-    } else {
-      val big = open.toDF()
-        .join(bigKeysHinted, Seq("relationId", "role"), "left_semi")
-        .as[Chain]
-      val (bigClosed, bigFailed) = assembleIterative(spark, big, maxRounds)
-      (closedInit.union(localOut.filter(_.closed)).union(bigClosed),
-        localOut.filter(c => !c.closed).union(bigFailed))
-    }
-  }
+  private val HeaderRole = "relation"
+  private val CentreRole = "admin_centre"
+
+  /** One row of a relation's group. Its `role` says which kind: "outer"
+    * or "inner" for a node of a member way (`wayId`, the node's position
+    * `seq`, `nodeId` and its coordinates, None when the node is missing),
+    * [[CentreRole]] for an admin_centre member (`nodeId`, coordinates),
+    * [[HeaderRole]] for the relation itself (`adminLevel`, `name`). */
+  private[jobs] final case class GroupRow(relationId: Long, role: String,
+      adminLevel: Int, name: String, wayId: Long, seq: Int, nodeId: Long,
+      lat7: Option[Long], lon7: Option[Long])
+
+  /** A relation after its group task: the finished area, or, when a role
+    * was too big to stitch locally, the area without rings and with
+    * `complete` meaning "no local failure", plus every closed chain and
+    * the big roles' open chains for the iterative path. */
+  private[jobs] final case class Assembled(area: AdminArea, pending: Seq[Chain])
 
   // Dataset.localCheckpoint keeps the ORIGIN plan's statistics, so
   // sizeInBytes estimates compound ~cubed per round and by round ~12
   // Catalyst spends minutes multiplying 10^5-digit BigInts. Rebuilding
   // from a checkpointed RDD resets stats to defaults each round.
-  private def truncateChains(spark: SparkSession, ds: Dataset[Chain]): Dataset[Chain] = {
-    import spark.implicits._
+  /** `ds` materialized and counted in one job. */
+  private def checkpointed[T: Encoder](spark: SparkSession,
+      ds: Dataset[T]): (Dataset[T], Long) = {
     val r = ds.rdd
     r.localCheckpoint()
-    r.count()
-    spark.createDataset(r)
+    val n = r.count()
+    (spark.createDataset(r), n)
+  }
+
+  /** The group task of one relation (see [[build]]). */
+  private def assembleRelation(rel: Long, rows: Iterator[GroupRow],
+      localMaxSegs: Int): Assembled = {
+    var header: GroupRow = null
+    var centre: GroupRow = null // the smallest admin_centre ref, located or not
+    val wayNodes = mutable.HashMap.empty[(String, Long), mutable.ArrayBuffer[GroupRow]]
+    rows.foreach { r =>
+      if (r.role == HeaderRole) header = r
+      else if (r.role == CentreRole) {
+        if (centre == null || r.nodeId < centre.nodeId) centre = r
+      } else if (r.lat7.isDefined)
+        wayNodes.getOrElseUpdate((r.role, r.wayId), mutable.ArrayBuffer.empty) += r
+    }
+    // one chain per (role, member way); a way listed twice under one
+    // role counts once
+    val chains = wayNodes.toSeq.sortBy(_._1).map { case ((role, wayId), rs) =>
+      val pts = rs.sortBy(_.seq).distinctBy(_.seq)
+      val coords = pts.iterator.flatMap(p => Iterator(p.lon7.get, p.lat7.get)).toArray
+      Chain(rel, role, wayId, pts.head.nodeId, pts.last.nodeId,
+        ArraySeq.unsafeWrapArray(coords), nWays = 1,
+        closed = pts.length >= 2 && pts.head.nodeId == pts.last.nodeId)
+    }
+    val closed = mutable.ArrayBuffer.empty[Chain]
+    val pending = mutable.ArrayBuffer.empty[Chain]
+    var failed = false
+    for ((role, cs) <- chains.groupBy(_.role).toSeq.sortBy(_._1)) {
+      val (ringWays, open) = cs.partition(_.closed)
+      closed ++= ringWays
+      if (open.length > localMaxSegs ||
+          open.map(_.coords.length.toLong).sum > LocalMaxCoordLongs) pending ++= open
+      else {
+        // <2 vertices can never merge: mark failed (Stitch would drop
+        // them silently)
+        val (segs, degenerate) = open.partition(_.coords.length >= 4)
+        val res = Stitch.stitch(segs.map(waySeg))
+        closed ++= res.rings.iterator.zipWithIndex.map { case (flat, idx) =>
+          Chain(rel, role, idx.toLong, 0L, 0L, flat.toSeq, nWays = 0, closed = true)
+        }
+        failed ||= degenerate.nonEmpty || res.failedWayIds.nonEmpty
+      }
+    }
+    val area = AdminArea(rel, header.adminLevel, header.name, Nil,
+      Option(centre).flatMap(_.lat7), Option(centre).flatMap(_.lon7), complete = !failed)
+    if (pending.nonEmpty) Assembled(area, (closed ++ pending).toSeq)
+    else {
+      val rings = canonicalRings(closed.toSeq)
+      Assembled(area.copy(rings = rings, complete = !failed && rings.nonEmpty), Nil)
+    }
+  }
+
+  /** Stitch matches on endpoint ids only; interior ids get non-colliding
+    * sentinels. */
+  private def waySeg(c: Chain): Stitch.WaySeg = {
+    val nv = c.coords.length / 2
+    val ids = new Array[Long](nv)
+    ids(0) = c.aNode; ids(nv - 1) = c.bNode
+    var i = 1
+    while (i < nv - 1) { ids(i) = Long.MinValue + i; i += 1 }
+    val xs = new Array[Long](nv)
+    val ys = new Array[Long](nv)
+    var k = 0
+    while (k < nv) { xs(k) = c.coords(2 * k); ys(k) = c.coords(2 * k + 1); k += 1 }
+    Stitch.WaySeg(c.chainId, ids, xs, ys)
+  }
+
+  /** A relation's closed chains as canonical rings: outers CCW, then
+    * holes CW, each in order of its first vertex (ties by chain id). */
+  private def canonicalRings(closed: Seq[Chain]): Seq[Seq[Long]] = {
+    val cs = closed.sortBy(_.chainId)
+    def rings(role: String, ccw: Boolean) = cs.filter(_.role == role)
+      .map(c => Geom.canonicalRing(dropClosingVertex(c.coords), wantCCW = ccw).toSeq)
+      .sortBy(r => (r.head, r(1)))
+    rings("outer", ccw = true) ++ rings("inner", ccw = false)
   }
 
   /** The iterative self-join loop (scale path for oversized relations).
@@ -215,7 +206,7 @@ object AdminAreas {
   def assembleIterative(spark: SparkSession, initial: Dataset[Chain],
       maxRounds: Int = 64): (Dataset[Chain], Dataset[Chain]) = {
     import spark.implicits._
-    def truncate(ds: Dataset[Chain]): Dataset[Chain] = truncateChains(spark, ds)
+    def truncate(ds: Dataset[Chain]): Dataset[Chain] = checkpointed(spark, ds)._1
     var chains = truncate(initial)
     var round = 0
     var openCount = chains.filter(!_.closed).count()
@@ -296,56 +287,84 @@ object AdminAreas {
   private def reversePairs(c: Seq[Long]): Seq[Long] =
     c.grouped(2).toSeq.reverse.flatten
 
-  /** Full pipeline: typed entities → AdminArea with canonical rings. */
+  /** Full pipeline: typed entities → AdminArea with canonical rings.
+    * The group stage is materialized here, in one job, because whether
+    * the iterative path runs depends on it; the result reads those
+    * blocks (`localMaxSegs` = 0 sends every open chain iterative). */
   def build(spark: SparkSession, osm: Dataset[OsmEntity],
       localMaxSegs: Int = DefaultLocalMaxSegs,
       onlyRelations: Option[DataFrame] = None): Dataset[AdminArea] = {
     import spark.implicits._
     // onlyRelations (a relation_id frame) restricts the whole build to
-    // a subset — the incremental-maintenance path; the semi-join keeps
-    // every downstream stage (chains, stitch, centres) naturally
-    // pruned because they all key off `admin`
-    val admin0 = adminRelations(osm)
-    val admin = onlyRelations
-      .map(r => admin0.join(r.select(col("relation_id")).distinct(),
-        Seq("relation_id"), "left_semi"))
-      .getOrElse(admin0)
-      .cache()
-    val (closed, failed) =
-      assemble(spark, initialChains(spark, osm, admin), localMaxSegs = localMaxSegs)
-    val ringsPerRel = closed
-      .groupByKey(c => c.relationId)
+    // a subset — the incremental-maintenance path; every row below keys
+    // off `admin`
+    val admin = onlyRelations.foldLeft(adminRelations(osm))((a, only) =>
+      a.join(only.select(col("relation_id")), Seq("relation_id"), "left_semi"))
+    // one exploded frame feeds the header and both member branches, so
+    // the relation window's shuffle is shared by all three
+    val members = admin.select(col("relation_id"), col("admin_level"), col("name"),
+      posexplode_outer(col("members")).as(Seq("pos", "m")))
+    val wayRows = members
+      .filter(col("m.mtype") === OsmKind.Way && col("m.role").isin("outer", "inner", ""))
+      .select(col("relation_id"),
+        when(col("m.role") === "inner", "inner").otherwise("outer").as("role"),
+        col("m.ref").as("way_id"))
+      .join(latestVisible(osm, OsmKind.Way).select(col("id").as("way_id"),
+        posexplode(col("refs")).as(Seq("seq", "node_id"))), "way_id")
+    val centreRows = members
+      .filter(col("m.mtype") === OsmKind.Node && col("m.role") === CentreRole)
+      .select(col("relation_id"), col("m.role").as("role"), lit(-1L).as("way_id"),
+        lit(0).as("seq"), col("m.ref").as("node_id"))
+    val located = wayRows.unionByName(centreRows)
+      .join(latestVisible(osm, OsmKind.Node).select(col("id").as("node_id"),
+        col("lat7"), col("lon7")), Seq("node_id"), "left_outer")
+      .select(col("relation_id"), col("role"), lit(0).as("admin_level"),
+        lit(null).cast("string").as("name"), col("way_id"), col("seq"),
+        col("node_id"), col("lat7"), col("lon7"))
+    val headers = members.filter(col("pos") === 0 || col("pos").isNull)
+      .select(col("relation_id"), lit(HeaderRole).as("role"),
+        col("admin_level"), col("name"), lit(-1L).as("way_id"), lit(0).as("seq"),
+        lit(-1L).as("node_id"), lit(null).cast("long").as("lat7"),
+        lit(null).cast("long").as("lon7"))
+    val rows = located.union(headers).toDF(
+      "relationId", "role", "adminLevel", "name", "wayId", "seq", "nodeId", "lat7", "lon7")
+    // the group task runs once, in the checkpoint job, and counts the
+    // relations it hands to the iterative path
+    val nPending = spark.sparkContext.longAccumulator("admin relations with a big role")
+    val assembled = rows.as[GroupRow]
+      .groupByKey(_.relationId)
       .mapGroups { (rel, it) =>
-        val cs = it.toArray.sortBy(_.chainId)
-        val outers = cs.filter(_.role == "outer")
-          .map(c => dropClosingVertex(c.coords))
-          .map(r => Geom.canonicalRing(r, wantCCW = true).toSeq)
-        val inners = cs.filter(_.role == "inner")
-          .map(c => dropClosingVertex(c.coords))
-          .map(r => Geom.canonicalRing(r, wantCCW = false).toSeq)
-        // deterministic ring order: canonical first vertex
-        val ordered = (outers.sortBy(r => (r.head, r(1))) ++
-          inners.sortBy(r => (r.head, r(1)))).toSeq
-        (rel, ordered)
+        val a = assembleRelation(rel, it, localMaxSegs)
+        if (a.pending.nonEmpty) nPending.add(1)
+        a
       }
-      .toDF("relation_id", "rings")
-    val failedRels = failed.select(col("relationId").as("relation_id")).distinct()
+      .localCheckpoint()
+    if (nPending.value == 0L) assembled.map(_.area)
+    else assembled.filter(_.pending.isEmpty).map(_.area)
+      .union(finishIterative(spark, assembled.filter(_.pending.nonEmpty)))
+  }
+
+  /** The relations whose group handed chains over: their open chains
+    * run through [[assembleIterative]], then all their closed chains
+    * become rings exactly as in the group task. */
+  private def finishIterative(spark: SparkSession,
+      pending: Dataset[Assembled]): Dataset[AdminArea] = {
+    import spark.implicits._
+    val chains = pending.flatMap(_.pending)
+    val (bigClosed, bigFailed) = assembleIterative(spark, chains.filter(!_.closed))
+    val rings = chains.filter(_.closed).union(bigClosed)
+      .groupByKey(_.relationId)
+      .mapGroups((rel, cs) => (rel, canonicalRings(cs.toSeq)))
+      .toDF("relationId", "_rings")
+    val failedRels = bigFailed.select(col("relationId")).distinct()
       .withColumn("_failed", lit(true))
-    val centres = admin
-      .select(col("relation_id"), explode(col("members")).as("m"))
-      .filter(col("m.mtype") === OsmKind.Node && col("m.role") === "admin_centre")
-      .groupBy("relation_id").agg(min(col("m.ref")).as("centre_node"))
-      .join(latestVisible(osm, OsmKind.Node).select(col("id").as("centre_node"),
-        col("lat7").as("c_lat7"), col("lon7").as("c_lon7")), Seq("centre_node"), "left_outer")
-    admin.drop("members")
-      .join(ringsPerRel, Seq("relation_id"), "left_outer")
-      .join(failedRels, Seq("relation_id"), "left_outer")
-      .join(centres, Seq("relation_id"), "left_outer")
-      .select(col("relation_id").as("relationId"),
-        col("admin_level").as("adminLevel"), col("name"),
-        coalesce(col("rings"), array()).as("rings"),
-        col("c_lat7").as("centreLat7"), col("c_lon7").as("centreLon7"),
-        (col("_failed").isNull && col("rings").isNotNull).as("complete"))
+    pending.map(_.area).toDF()
+      .join(rings, Seq("relationId"), "left_outer")
+      .join(failedRels, Seq("relationId"), "left_outer")
+      .select(col("relationId"), col("adminLevel"), col("name"),
+        coalesce(col("_rings"), array()).as("rings"),
+        col("centreLat7"), col("centreLon7"),
+        (col("complete") && col("_failed").isNull && col("_rings").isNotNull).as("complete"))
       .as[AdminArea]
   }
 
@@ -382,47 +401,57 @@ object AdminAreas {
 
   // ---- incremental maintenance (replication-diff path) --------------
 
+  private val DiffBroadcastMaxRows = 4000000L
+
   /** Relations whose assembled geometry MAY change under `diffs`:
     * directly-changed relations, relations with a member way that was
-    * changed or that references a changed node (way membership taken
-    * from BOTH snapshots — a node leaving a way must still dirty the
-    * way's old relations), and relations with a changed member node
-    * (admin_centre moves). The diff side of every probe is the small
-    * side and is broadcast under the usual bound. Output: one
-    * `relation_id` column, distinct. */
+    * changed or that references a changed node, and relations with a
+    * changed member node (admin_centre moves). Membership is read from
+    * EVERY version of the ways and relations in `prevSnapshot ∪ diffs`,
+    * with no latest-version windows. That is a superset of the rule over
+    * the latest visible versions of both snapshots (a node leaving a way
+    * must still dirty the way's old relations): every row of the new
+    * snapshot comes from those two inputs, and rebuilding an extra
+    * relation gives the same area. So `newSnapshot` is not read. The
+    * diff side of every probe is broadcast under the usual bound.
+    * Output: one `relation_id` column, distinct, materialized, and
+    * broadcast-hinted under the same bound for the merges that use it. */
   def touchedRelations(spark: SparkSession, prevSnapshot: Dataset[OsmEntity],
       newSnapshot: Dataset[OsmEntity], diffs: Dataset[OsmEntity],
-      diffBroadcastMaxRows: Long = 4000000L): DataFrame = {
+      diffBroadcastMaxRows: Long = DiffBroadcastMaxRows): DataFrame = {
     import spark.implicits._
-    val d = diffs.localCheckpoint()
-    val nDiff = d.count()
-    def bounded(df: DataFrame, est: Long) =
-      graft.util.Joins.boundedBroadcast(df, est, diffBroadcastMaxRows)
-    def ids(kind: Byte, as: String): DataFrame =
-      d.filter(_.kind == kind).map(_.id).toDF(as).distinct()
-    val dNodes = ids(OsmKind.Node, "node_id")
-    val dWays = ids(OsmKind.Way, "way_id")
-    val dRels = ids(OsmKind.Relation, "relation_id")
-    def wayRefs(snap: Dataset[OsmEntity]): DataFrame =
-      latestVisible(snap, OsmKind.Way)
-        .select(col("id").as("way_id"), explode(col("refs")).as("node_id"))
-    val waysViaNodes = wayRefs(prevSnapshot).union(wayRefs(newSnapshot))
-      .join(bounded(dNodes, nDiff), Seq("node_id"), "left_semi")
-      .select("way_id").distinct()
-    val touchedWays = dWays.union(waysViaNodes).distinct()
-    def relMembers(snap: Dataset[OsmEntity]): DataFrame =
-      latestVisible(snap, OsmKind.Relation)
-        .select(col("id").as("relation_id"), explode(col("members")).as("m"))
-    val members = relMembers(prevSnapshot).union(relMembers(newSnapshot))
+    val (d, nDiff) = checkpointed(spark, diffs)
+    touchedSet(spark, prevSnapshot, d, nDiff, diffBroadcastMaxRows)
+  }
+
+  /** [[touchedRelations]] over materialized diffs `d` of `nDiff` rows. */
+  private def touchedSet(spark: SparkSession, prevSnapshot: Dataset[OsmEntity],
+      d: Dataset[OsmEntity], nDiff: Long, maxRows: Long): DataFrame = {
+    import spark.implicits._
+    def bounded(df: DataFrame, est: Long) = Joins.boundedBroadcast(df, est, maxRows)
+    def ofKind(ds: Dataset[OsmEntity], kind: Byte) = ds.filter(col("kind") === kind)
+    val every = prevSnapshot.union(d)
+    val dNodes = bounded(ofKind(d, OsmKind.Node).select(col("id").as("node_id")), nDiff)
+    val waysViaNodes = ofKind(every, OsmKind.Way)
+      .select(col("id").as("way_id"), explode(col("refs")).as("node_id"))
+      .join(dNodes, Seq("node_id"), "left_semi")
+      .select("way_id")
+    val touchedWays = bounded(
+      ofKind(d, OsmKind.Way).select(col("id").as("way_id")).union(waysViaNodes), nDiff * 4)
+    val members = ofKind(every, OsmKind.Relation)
+      .select(col("id").as("relation_id"), explode(col("members")).as("m"))
     val viaWays = members.filter(col("m.mtype") === OsmKind.Way)
       .select(col("relation_id"), col("m.ref").as("way_id"))
-      .join(bounded(touchedWays, nDiff * 4), Seq("way_id"), "left_semi")
+      .join(touchedWays, Seq("way_id"), "left_semi")
       .select("relation_id")
     val viaNodes = members.filter(col("m.mtype") === OsmKind.Node)
       .select(col("relation_id"), col("m.ref").as("node_id"))
-      .join(bounded(dNodes, nDiff), Seq("node_id"), "left_semi")
+      .join(dNodes, Seq("node_id"), "left_semi")
       .select("relation_id")
-    dRels.union(viaWays).union(viaNodes).distinct()
+    val (ids, n) = checkpointed(spark,
+      ofKind(d, OsmKind.Relation).select(col("id").as("relation_id"))
+        .union(viaWays).union(viaNodes).distinct().as[Long])
+    bounded(ids.toDF("relation_id"), n)
   }
 
   /** Incremental admin-area maintenance: apply a replication-diff batch
@@ -430,32 +459,44 @@ object AdminAreas {
     * over unchanged — the planet-scale answer to minutely diffs (a full
     * rebuild re-stitches ~10^6 relations for a batch touching a
     * handful). Equivalence to the full rebuild on the new snapshot is
-    * spec-pinned (AdminAreasSpec). The result carries the new snapshot
-    * (what the next diff batch applies against), the merged area set,
-    * and the touched/rebuilt frames [[incrementalCover]] consumes. */
+    * spec-pinned (AdminIncrementalSpec, AdminAreasSpec). The result
+    * carries the new snapshot (what the next diff batch applies
+    * against), the merged area set, and the touched/rebuilt frames
+    * [[incrementalCover]] consumes. */
   final case class IncrementalResult(
       snapshot: Dataset[OsmEntity], areas: Dataset[AdminArea],
       touched: DataFrame, rebuilt: Dataset[AdminArea])
 
+  /** The diffs are materialized once. The touched set does not read the
+    * new snapshot, so it runs beside the diff apply on a one-thread pool
+    * this call owns; each phase is an [[graft.util.Obs]] span. */
   def incrementalUpdate(spark: SparkSession, prevSnapshot: Dataset[OsmEntity],
       prevAreas: Dataset[AdminArea], diffs: Dataset[OsmEntity],
       localMaxSegs: Int = DefaultLocalMaxSegs): IncrementalResult = {
     import spark.implicits._
-    // the merged snapshot is consumed by ~6 downstream scans (touch
-    // probes over both snapshots, the restricted rebuild, and whatever
-    // the caller does next) — materialize it once; at planet scale this
-    // is the snapshot stage a real pipeline persists anyway
-    val next = graft.streaming.Replication.applyDiffs(spark, prevSnapshot, diffs)
-      .localCheckpoint()
-    val touched = touchedRelations(spark, prevSnapshot, next, diffs)
-      .localCheckpoint()
+    val (d, nDiff) = checkpointed(spark, diffs)
+    val pool = Executors.newSingleThreadExecutor()
+    val (next, touched) = try {
+      val touchedF = pool.submit(new Callable[DataFrame] {
+        def call(): DataFrame = Obs.span(spark, "admin touched")(
+          touchedSet(spark, prevSnapshot, d, nDiff, DiffBroadcastMaxRows))._1
+      })
+      // the merged snapshot is consumed by the restricted rebuild and by
+      // whatever the caller does next: materialize it once; at planet
+      // scale this is the snapshot stage a real pipeline persists anyway
+      val next = Try(Obs.span(spark, "admin apply diffs")(
+        Replication.applyDiffs(spark, prevSnapshot, d).localCheckpoint())._1)
+      // await the touched set even when the apply failed, so no job of
+      // this call outlives it
+      val touched = try touchedF.get() catch { case e: ExecutionException => throw e.getCause }
+      (next.get, touched)
+    } finally pool.shutdown()
     // rebuilt: touched relations still admin+visible in the NEW
     // snapshot (deleted / de-tagged relations drop out of the semi-join
-    // naturally); kept: everything untouched rides over as-is. The
-    // rebuilt side is checkpointed because the result exposes it to
-    // the area merge AND the cover merge.
-    val rebuilt = build(spark, next, localMaxSegs, Some(touched))
-      .localCheckpoint()
+    // naturally), already materialized by build; kept: everything
+    // untouched rides over as-is
+    val rebuilt = Obs.span(spark, "admin rebuild")(
+      build(spark, next, localMaxSegs, Some(touched)))._1
     val kept = prevAreas
       .join(touched, prevAreas("relationId") === touched("relation_id"),
         "left_anti")
@@ -467,17 +508,19 @@ object AdminAreas {
     * with the rebuilt areas' fresh cover rows — old rows of touched
     * relations drop (covers of deleted relations with them), untouched
     * rows carry over byte-identical, only the rebuilt relations pay
-    * the cover computation. `rebuiltAreas` must be exactly the areas
-    * built for the touched set; `touched` the id frame that selected
-    * them. */
+    * the cover computation, materialized here in its own span.
+    * `rebuiltAreas` must be exactly the areas built for the touched set;
+    * `touched` the id frame that selected them. */
   def incrementalCover(spark: SparkSession, prevCover: Dataset[CoverRowEx],
       rebuiltAreas: Dataset[AdminArea], touched: DataFrame,
       maxLevel: Int): Dataset[CoverRowEx] = {
     import spark.implicits._
+    val fresh = Obs.span(spark, "admin cover merge")(
+      coverTableDetailed(spark, rebuiltAreas, maxLevel).localCheckpoint())._1
     val kept = prevCover
       .join(touched, prevCover("relationId") === touched("relation_id"),
         "left_anti")
       .as[CoverRowEx]
-    kept.union(coverTableDetailed(spark, rebuiltAreas, maxLevel))
+    kept.union(fresh)
   }
 }
