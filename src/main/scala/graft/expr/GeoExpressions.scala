@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.geo.{Cells, CentreTree, Tiling}
+import graft.geo.{Cells, CentreTree, CoverIndex, Tiling}
 
 /** Catalyst codegen scalar kernels (SURVEY.md §2-I). Each expression
   * emits a call to a static forwarder in [[RT]]/[[graft.geo.Cells]]/
@@ -161,6 +161,35 @@ case class KnnTreeExpr(pts: Expression, tree: Broadcast[CentreTree], k: Int)
     copy(pts = c)
 }
 
+/** cover_probe(lat7, lon7) → ARRAY<BIGINT>: the containment kernel
+  * ([[RT.coverProbe]]) — the relations whose cover holds the point, one
+  * entry per matching cover row, or with `fallback` the point's
+  * fallback-cell candidates. Meant for `explode`: in generated code the
+  * array is a per-task buffer that the next row overwrites. The
+  * [[CoverIndex]] rides as ONE Spark broadcast, resolved once per
+  * generated-code instance (as [[KnnTreeExpr]] does). */
+case class CoverProbeExpr(lat: Expression, lon: Expression,
+    index: Broadcast[CoverIndex], fallback: Boolean) extends BinaryExpression {
+  override def left: Expression = lat
+  override def right: Expression = lon
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    RT.coverProbe(a.asInstanceOf[Long], b.asInstanceOf[Long], index.value,
+      fallback, new CoverProbeOut).copy()
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cls = classOf[CoverIndex].getName
+    val bRef = ctx.addReferenceObj("coverIndexBc", index, classOf[Broadcast[_]].getName)
+    val idx = ctx.addMutableState(cls, "coverIndex", v => s"$v = ($cls) $bRef.value();")
+    val outCls = classOf[CoverProbeOut].getName
+    val out = ctx.addMutableState(outCls, "coverProbeOut", v => s"$v = new $outCls();")
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"graft.expr.RT.coverProbe($a, $b, $idx, $fallback, $out)")
+  }
+  override protected def withNewChildrenInternal(
+      l: Expression, r: Expression): CoverProbeExpr = copy(lat = l, lon = r)
+}
+
 /** Column-level API + SQL registration for the kernels. */
 object GeoFunctions {
   import org.apache.spark.sql.graftbridge.{column, expression}
@@ -186,6 +215,9 @@ object GeoFunctions {
     column(KnnTopExpr(expression(pts), rels, lats, lons, k))
   def knn_tree(pts: Column, tree: Broadcast[CentreTree], k: Int): Column =
     column(KnnTreeExpr(expression(pts), tree, k))
+  def cover_probe(lat7: Column, lon7: Column, index: Broadcast[CoverIndex],
+      fallback: Boolean): Column =
+    column(CoverProbeExpr(expression(lat7), expression(lon7), index, fallback))
   def packed_lat7(p: Column): Column = {
     import org.apache.spark.sql.functions._
     shiftrightunsigned(p, 32) - 900000000L

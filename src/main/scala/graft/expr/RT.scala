@@ -1,9 +1,31 @@
 package graft.expr
 
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.geo.{Cells, CentreTree, Geom, GeomCell}
+import graft.geo.{Cells, CentreTree, CoverIndex, Geom, GeomCell}
+
+/** The reusable result of [[RT.coverProbe]]: a hit buffer, and a
+  * `long[]` laid out as an UnsafeArrayData of BIGINT (element count,
+  * null words, values) that [[array]] points at the current hits. */
+final class CoverProbeOut {
+  val hits = new CoverIndex.Hits
+  private var words = new Array[Long](16)
+  private val unsafe = new UnsafeArrayData
+
+  def array: ArrayData = {
+    val n = hits.n
+    val header = UnsafeArrayData.calculateHeaderPortionInBytes(n) / 8
+    if (words.length < header + n) words = new Array[Long](header + n)
+    words(0) = n
+    java.util.Arrays.fill(words, 1, header, 0L)
+    System.arraycopy(hits.buf, 0, words, header, n)
+    unsafe.pointTo(words, Platform.LONG_ARRAY_OFFSET, (header + n) * 8)
+    unsafe
+  }
+}
 
 /** Static runtime kernels referenced from generated (Janino) code — every
   * method here must be Java-callable via the Scala static forwarder.
@@ -109,16 +131,30 @@ object RT {
     inside
   }
 
-  /** Localized PIP (GeomCell.pointInCell) over an ArrayData edge list
-    * [ax,ay,bx,by]*; wx/sy derived from the cell id. */
+  /** Localized PIP ([[GeomCell.pointInCell]]) of a shuffled-path cover
+    * row: the SW corner comes from the cell id and the [ax,ay,bx,by]*
+    * edges are read in place — the loop the [[CoverIndex]] kernel runs. */
   def pointInCell(lon7: Long, lat7: Long, cell: Long, cornerInside: Boolean,
-      edges: ArrayData): Boolean = {
-    val (wx, sy, _, _) = Cells.bounds(cell)
-    val n = edges.numElements()
-    val arr = new Array[Long](n)
-    var i = 0
-    while (i < n) { arr(i) = edges.getLong(i); i += 1 }
-    GeomCell.pointInCell(lon7, lat7, wx, sy, cornerInside, arr)
+      edges: ArrayData): Boolean = edges match {
+    case u: UnsafeArrayData =>
+      val n = u.numElements()
+      GeomCell.pointInCell(lon7, lat7, Cells.west(cell), Cells.south(cell),
+        cornerInside, u.getBaseObject,
+        u.getBaseOffset + UnsafeArrayData.calculateHeaderPortionInBytes(n), n)
+    case a =>
+      GeomCell.pointInCell(lon7, lat7, Cells.west(cell), Cells.south(cell),
+        cornerInside, a.toLongArray())
+  }
+
+  /** Containment kernel: the relations of `index` holding (lat7, lon7)
+    * ([[CoverIndex.probe]]), as an array `out` owns and reuses — the
+    * explode that consumes it reads every element before the next
+    * point, so no point allocates. */
+  def coverProbe(lat7: Long, lon7: Long, index: CoverIndex, fallback: Boolean,
+      out: CoverProbeOut): ArrayData = {
+    out.hits.n = 0
+    index.probe(lat7, lon7, fallback, out.hits)
+    out.array
   }
 
   /** Sentinel for "no coordinate found" (cannot collide with a packed

@@ -97,13 +97,22 @@ object Cells {
     * lon7 ∈ [lonLo, lonHi), lat7 ∈ [latLo, latHi) — exact inverses of
     * encode's floor division (ceil-div boundaries). */
   def bounds(cell: Long): (Long, Long, Long, Long) = {
-    val l = level(cell); val n = 1L << l
-    val cx = x(cell); val cy = y(cell)
-    def ceilDiv(a: Long, b: Long): Long = (a + b - 1) / b
-    val lonLo = ceilDiv(cx * LonSpan, n) + LonMin
-    val lonHi = ceilDiv((cx + 1) * LonSpan, n) + LonMin
-    val latLo = ceilDiv(cy * LatSpan, n) + LatMin
-    val latHi = ceilDiv((cy + 1) * LatSpan, n) + LatMin
-    (lonLo, latLo, lonHi, latHi)
+    val l = level(cell); val cx = x(cell); val cy = y(cell)
+    (west(cx, l), south(cy, l), west(cx + 1, l), south(cy + 1, l))
   }
+
+  /** West wall of a cell: `bounds`' lonLo, without the tuple. */
+  @inline def west(cell: Long): Long = west(x(cell), level(cell))
+
+  /** South wall of a cell: `bounds`' latLo, without the tuple. */
+  @inline def south(cell: Long): Long = south(y(cell), level(cell))
+
+  /** West wall of column `x` at `level`: the ceil-div of x · LonSpan by
+    * 2^level (as a shift), the inverse of encode's floor division. */
+  @inline def west(x: Long, level: Int): Long =
+    ((x * LonSpan + (1L << level) - 1) >> level) + LonMin
+
+  /** South wall of row `y` at `level`, as [[west]]. */
+  @inline def south(y: Long, level: Int): Long =
+    ((y * LatSpan + (1L << level) - 1) >> level) + LatMin
 }

@@ -1,5 +1,7 @@
 package graft.geo
 
+import org.apache.spark.unsafe.Platform
+
 /** Localized point-in-polygon (the planet-scale refine path, SURVEY.md
   * §7.4 future work): a boundary cover cell stores only the edges that
   * intersect it plus the containment bit of its SW corner; containment
@@ -46,16 +48,26 @@ object GeomCell {
     * given the corner's containment bit and the cell-local edge list
     * (flat [ax,ay,bx,by]*). Boundary = inside. */
   def pointInCell(px: Long, py: Long, wx: Long, sy: Long,
-      cornerInside: Boolean, edges: Array[Long]): Boolean = {
+      cornerInside: Boolean, edges: Array[Long]): Boolean =
+    pointInCell(px, py, wx, sy, cornerInside, edges,
+      Platform.LONG_ARRAY_OFFSET, edges.length)
+
+  /** [[pointInCell]] over `nLongs` edge coordinates read in place from
+    * `base` at byte `offset` — a slice of a `long[]` (the cover index)
+    * or the values of an UnsafeArrayData (a cover row's `edges`), so
+    * neither refine path copies its edges. */
+  def pointInCell(px: Long, py: Long, wx: Long, sy: Long,
+      cornerInside: Boolean, base: AnyRef, offset: Long, nLongs: Int): Boolean = {
     var flips = 0
-    var i = 0
-    while (i < edges.length) {
-      val ax = edges(i); val ay = edges(i + 1)
-      val bx = edges(i + 2); val by = edges(i + 3)
+    var o = offset
+    val end = offset + 8L * nLongs
+    while (o < end) {
+      val ax = Platform.getLong(base, o); val ay = Platform.getLong(base, o + 8)
+      val bx = Platform.getLong(base, o + 16); val by = Platform.getLong(base, o + 24)
       if (Geom.onSegment(px, py, ax, ay, bx, by)) return true
       if (crossesVertical(ax, ay, bx, by, wx, sy, py)) flips += 1
       if (crossesHorizontal(ax, ay, bx, by, py, wx, px)) flips += 1
-      i += 4
+      o += 32
     }
     cornerInside ^ ((flips & 1) == 1)
   }

@@ -75,9 +75,9 @@ object Extract {
       .select(col("id").as("node_id"), col("lat7"), col("lon7"))
     // containment-only prep: extracts never build the kNN, so the
     // centre-index materialization of the full prepare() is skipped
-    val (cover, polygons) = SpatialJoin.prepareContainment(spark, area, p)
+    val (cover, polygons, info) = SpatialJoin.prepareContainment(spark, area, p)
     val seeds = SpatialJoin
-      .containmentJoin(spark, nodes, cover, polygons, p)
+      .containmentJoin(spark, nodes, cover, polygons, p, Some(info))
       .select("node_id")
     complete(spark, osm, nodesLV, seeds)
   }

@@ -5,23 +5,26 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.expr.{GeoFunctions => G}
-import graft.geo.CentreTree
+import graft.geo.{CentreTree, CoverIndex}
 import graft.jobs.AdminAreas.{AdminArea, CoverRowEx}
+import graft.util.Obs
 
 /** The flagship pipeline (SURVEY.md J5-J8, north rule): geoparse page
-  * text → quadcell encode → multi-level cell equi-join against the
-  * compacted admin cover → ray-casting PIP refine for boundary cells →
-  * exact kNN to the nearest admin centres → z/x/y tile aggregation.
-  * Everything is DataFrame + codegen expressions — the spatial join is a
-  * plain Catalyst equi-join (AQE-optimizable), never a custom physical
-  * operator, because the PIP→cell-join rewrite happens at API level
-  * (SURVEY.md §4.3).
+  * text → containment probe against the compacted admin cover (cell
+  * lookup at each cover level + ray-casting refine for boundary cells)
+  * → exact kNN to the nearest admin centres → z/x/y tile aggregation.
+  * Everything is DataFrame + codegen expressions, never a custom
+  * physical operator, because the PIP→cell rewrite happens at API level
+  * (SURVEY.md §4.3). While the cover fits the broadcast bound the probe
+  * is one codegen kernel over a broadcast [[CoverIndex]]; above it the
+  * probe is a plain Catalyst cell equi-join (AQE-optimizable).
   *
-  * Skew (J8): pages concentrate in few cells (cities). On the broadcast
-  * path a hot cell costs nothing extra; on the shuffled path AQE's
-  * skew-join split divides an oversized join partition at runtime from
-  * the shuffle's own map statistics (measured faster than static
-  * hot-cell salting: plans/r11/salting_vs_aqe.txt).
+  * Skew (J8): pages concentrate in few cells (cities). On the kernel
+  * path a hot cell costs nothing extra (there is no exchange before the
+  * tile aggregate); on the shuffled path AQE's skew-join split divides
+  * an oversized join partition at runtime from the shuffle's own map
+  * statistics (measured faster than static hot-cell salting:
+  * plans/r11/salting_vs_aqe.txt).
   */
 object SpatialJoin {
 
@@ -30,11 +33,10 @@ object SpatialJoin {
 
   final case class Params(
       coverMaxLevel: Int = 17,
-      // the containment join's cover side broadcasts while it fits
-      // (boundary rows carry clipped edges, so rows are wide), and a
-      // planet-detail cover beyond it degrades to the shuffled
-      // equi-join deterministically: a forced broadcast() disables
-      // Spark's own size check
+      // the containment join's cover side is broadcast as a CoverIndex
+      // while it fits (boundary rows carry clipped edges, so rows are
+      // wide); a planet-detail cover beyond it takes the shuffled
+      // equi-join instead
       coverBroadcastMaxRows: Long = 2000000L,
       // centre sides AT OR UNDER this row count take the DENSE kNN
       // kernel: the whole centre table rides the plan as constant
@@ -55,90 +57,120 @@ object SpatialJoin {
       .select(col("url"), G.packed_lat7(col("p")).as("lat7"),
         G.packed_lon7(col("p")).as("lon7"))
 
-  /** Cover-side facts [[containmentJoin]] needs BEFORE planning: the
-    * distinct cover levels (drives the ancestor explode), the row count
-    * (drives the bounded-broadcast decision) and whether any fallback
-    * cells exist (drives the union-branch skip). All three are
-    * properties of the prepared cover, so [[prepare]] computes them
-    * once per polygon side — per-page-batch joins then plan with ZERO
-    * cover-side driver actions (the timed flagship pass used to run
-    * three small jobs per pass, a fixed cost the many-pass high-core
-    * bench rungs paid 4×). */
-  final case class CoverInfo(levels: Seq[Int], nRows: Long, hasFallback: Boolean)
+  /** [[geoparsedPoints]] without the filter: pages with no mention keep
+    * null coordinates, which the containment probe drops by itself.
+    * The flagship's join reads this form because Catalyst pushes the
+    * null filter below the projection, which parses every page twice. */
+  private def pagePoints(pages: DataFrame): DataFrame =
+    pages.select(col("url"), G.geoparse_packed(col("text")).as("p"))
+      .select(col("url"), G.packed_lat7(col("p")).as("lat7"),
+        G.packed_lon7(col("p")).as("lon7"))
 
-  /** One combined action over the (checkpointed) cover — the fused form
-    * of the three per-call actions containmentJoin ran through round 8. */
-  def coverInfoOf(cover: Dataset[CoverRowEx]): CoverInfo = {
-    val r = cover.toDF("relation_id", "cell", "full", "corner_inside",
-        "fallback", "edges")
-      .agg(collect_set(shiftrightunsigned(col("cell"), 58).cast("int")).as("ls"),
-        count(lit(1)).as("n"),
-        max(col("fallback")).as("fb"))
-      .head()
-    CoverInfo(r.getSeq[Int](0).sorted, r.getLong(1),
-      !r.isNullAt(2) && r.getBoolean(2))
+  /** Cover-side facts [[containmentJoin]] plans with: the distinct
+    * cover levels, the row count, whether any fallback cells exist and,
+    * while the cover has at most `coverBroadcastMaxRows` rows, its
+    * [[CoverIndex]] as one Spark broadcast. All are properties of the
+    * prepared cover, so [[prepare]] computes them once per polygon side
+    * and per-page-batch joins plan with ZERO cover-side driver actions. */
+  final case class CoverInfo(levels: Seq[Int], nRows: Long, hasFallback: Boolean,
+      index: Option[Broadcast[CoverIndex]] = None)
+
+  /** One pass over `cover` (one job, the "spatial cover index" span):
+    * every partition reports its row count, levels and fallback
+    * presence, plus its rows while it holds at most `maxRows`; when the
+    * whole cover has at most `maxRows` rows they become the broadcast
+    * [[CoverIndex]]. Above the bound there is no index, and a driver
+    * holds at most one bound's worth of rows per cover partition while
+    * the pass runs. */
+  def coverInfoOf(cover: Dataset[CoverRowEx], maxRows: Long): CoverInfo = {
+    val spark = cover.sparkSession
+    Obs.span(spark, "spatial cover index") {
+      val parts = cover.rdd.mapPartitions { rows =>
+        val b = new CoverIndex.PartBuilder(maxRows)
+        rows.foreach(r => b.add(r.relationId, r.cell, r.full, r.cornerInside,
+          r.fallback, r.edges))
+        Iterator(b.result())
+      }.collect().toSeq
+      val n = parts.map(_.n).sum
+      val index =
+        if (n <= maxRows) Some(spark.sparkContext.broadcast(CoverIndex.build(parts)))
+        else None
+      CoverInfo(CoverIndex.levelsOf(parts.foldLeft(0)(_ | _.levelMask)).toSeq, n,
+        parts.exists(_.fallback), index)
+    }._1
+  }
+
+  /** The cover rows held by a broadcast [[CoverIndex]], regenerated on
+    * the executors, so a prepared cover needs no checkpoint beside its
+    * index. */
+  private def coverView(spark: SparkSession,
+      index: Broadcast[CoverIndex]): Dataset[CoverRowEx] = {
+    import spark.implicits._
+    val slices = spark.sparkContext.defaultParallelism
+    spark.range(0, slices, 1, slices).as[Long].flatMap { i =>
+      index.value.rows(i.toInt, slices).map { case (rel, c) =>
+        CoverRowEx(rel, c.cell, c.full, c.cornerInside, c.fallback, c.edges.toSeq)
+      }
+    }
   }
 
   /** J5: containment join. Returns the points' own columns (at minimum
     * url, lat7, lon7 — any extra columns such as an event timestamp
     * ride through, enabling the streaming window pipeline; they must
-    * not collide with the cover column names) plus `relation_id`.
-    * Refine is LOCALIZED (GeomCell): boundary cover rows carry their
-    * clipped edges + SW-corner parity, so per-candidate cost is
-    * O(edges-in-cell) — independent of polygon size — and the polygon
-    * rings table never enters the hot path (only the rare `fallback`
-    * cells join it). */
+    * not collide with `relation_id` or the cover column names) plus
+    * `relation_id`, one row per (point, matching cover row).
+    *
+    * While the cover has at most `coverBroadcastMaxRows` rows (and `info`
+    * carries its index), the probe is ONE codegen kernel per point:
+    * `explode(cover_probe(lat7, lon7))` walks the point's ancestors at
+    * the cover's levels in the broadcast [[CoverIndex]], emits `full`
+    * rows directly and runs the localized refine (GeomCell) on boundary
+    * rows — no explode to one row per level, no join. Above the bound,
+    * each point is exploded into its ancestor cells and shuffle-hash
+    * equi-joined with the cover, then filtered by
+    * `full OR point_in_cell`, so AQE's skew split applies. On both
+    * paths the rare `fallback` cells are candidates refined against the
+    * full rings of `polygons`. */
   def containmentJoin(spark: SparkSession, points: DataFrame,
       cover: Dataset[CoverRowEx], polygons: DataFrame, p: Params,
       info: Option[CoverInfo] = None): DataFrame = {
     val outCols = points.columns.toSeq.map(col) :+ col("relation_id")
-    val coverDf = cover.toDF("relation_id", "cell", "full", "corner_inside",
-      "fallback", "edges")
-    // cover-side facts (levels / row count / fallback presence) come
-    // precomputed from [[Prepared]] — zero cover-side actions per page
-    // batch (the timed flagship pass used to pay three small jobs each
-    // pass, which taxed the many-pass high-core rungs hardest) — or,
-    // for direct callers, from ONE combined action in [[coverInfoOf]]
-    val ci = info.getOrElse(coverInfoOf(cover))
-    val levels = ci.levels
-    val pts = points.withColumn("pcell",
-      G.cell_encode(col("lat7"), col("lon7"), lit(p.coverMaxLevel)))
-    val keyed = pts.withColumn("jcell", explode(array(
-      levels.map(l => G.cell_ancestor(col("pcell"), lit(l))): _*)))
-
-    // page-side stats after the explode are Generate-underestimated, so
-    // without the explicit bound on the cover's row count Spark could
-    // pick either side at any true size
-    val cand = keyed.join(
-      graft.util.Joins.boundedBroadcast(coverDf, ci.nRows, p.coverBroadcastMaxRows),
-      col("jcell") === col("cell"))
-
-    // branches recompute the candidate chain — a narrow all-codegen
-    // pipeline from the source scan (no shuffle); streaming passes beat
+    // cover-side facts come precomputed from [[Prepared]] or, for direct
+    // callers, from ONE pass in [[coverInfoOf]]
+    val ci = info.getOrElse(coverInfoOf(cover, p.coverBroadcastMaxRows))
+    // each branch recomputes its points — a narrow all-codegen pipeline
+    // from the source scan (no shuffle); streaming passes beat
     // materializing 10^7+ rows into the block manager (measured:
-    // checkpoint contention inverted 8c vs 32c). The full-cell and
-    // localized-refine cases share ONE pass (`full OR point_in_cell`
-    // short-circuits, so full cells never evaluate the refine); only
-    // the rare `fallback` cells re-read the source and touch polygons.
-    val mainHits = cand.filter(!col("fallback"))
-      .filter(col("full") || G.point_in_cell(col("lon7"), col("lat7"), col("cell"),
-        col("corner_inside"), col("edges")))
-      .select(outCols: _*)
-    // skip the union's second branch when the cover has no fallback
-    // cells at all (a property of the tiny polygon side, known from
-    // CoverInfo; typical covers at detail level 17 have none).
-    // Statically this halves the source scans; at runtime AQE's
-    // empty-relation propagation already collapsed the empty-broadcast
-    // branch (measured: no throughput delta), so the static skip is
-    // for plan clarity and non-AQE sessions.
-    if (!ci.hasFallback) mainHits
-    else {
-      val fallbackHits = cand.filter(col("fallback"))
-        .join(polygons, "relation_id")
-        .filter(G.point_in_rings(col("lon7"), col("lat7"), col("rings")))
-        .select(outCols: _*)
-      mainHits.union(fallbackHits)
+    // checkpoint contention inverted 8c vs 32c). Only the rare
+    // `fallback` cells re-read the source and touch polygons; covers
+    // with none (typical at detail level 17) skip that branch.
+    val kernel = ci.index.filter(_ => ci.nRows <= p.coverBroadcastMaxRows)
+    val (mainHits, candidates) = kernel match {
+      case Some(index) =>
+        def probe(fallback: Boolean) = points.select(col("*"), explode(
+          G.cover_probe(col("lat7"), col("lon7"), index, fallback)).as("relation_id"))
+        (probe(fallback = false), probe(fallback = true))
+      case None =>
+        val coverDf = cover.toDF("relation_id", "cell", "full", "corner_inside",
+          "fallback", "edges")
+        val keyed = points
+          .withColumn("pcell", G.cell_encode(col("lat7"), col("lon7"), lit(p.coverMaxLevel)))
+          .withColumn("jcell", explode(array(
+            ci.levels.map(l => G.cell_ancestor(col("pcell"), lit(l))): _*)))
+        // the explode's Generate stats are underestimated, so only the
+        // explicit hint keeps Spark from broadcasting either side
+        val cand = keyed.join(coverDf.hint("shuffle_hash"), col("jcell") === col("cell"))
+        (cand.filter(!col("fallback"))
+          .filter(col("full") || G.point_in_cell(col("lon7"), col("lat7"), col("cell"),
+            col("corner_inside"), col("edges"))),
+          cand.filter(col("fallback")))
     }
+    val hits = mainHits.select(outCols: _*)
+    if (!ci.hasFallback) hits
+    else hits.union(candidates.select(outCols: _*)
+      .join(polygons, "relation_id")
+      .filter(G.point_in_rings(col("lon7"), col("lat7"), col("rings")))
+      .select(outCols: _*))
   }
 
   /** Materialized kNN centre side: checkpointed rows + their count,
@@ -262,8 +294,10 @@ object SpatialJoin {
     * the cover is a property of the admin dataset, not of the pages.
     * `centreIdx` carries the materialized centre rows + count so every
     * batch's kNN skips the per-call checkpoint + recount; `coverInfo`
-    * carries the cover-side planning facts so every batch's containment
-    * join plans without touching the cluster. */
+    * carries the cover-side planning facts and the broadcast
+    * [[CoverIndex]] so every batch's containment join plans without
+    * touching the cluster. Within the row bound `cover` is a view
+    * regenerated from that broadcast. */
   final case class Prepared(cover: Dataset[CoverRowEx], polygons: DataFrame,
       centres: DataFrame, centreIdx: CentreIndex, coverInfo: CoverInfo)
 
@@ -277,34 +311,41 @@ object SpatialJoin {
     .select(col("relationId").as("relation_id"),
       col("centreLat7").as("c_lat7"), col("centreLon7").as("c_lon7"))
 
+  /** The polygon side of the containment join. One pass over the
+    * freshly built cover yields its [[CoverInfo]] and, within the row
+    * bound, its broadcast index, which then stands in for the cover (a
+    * view regenerated from the broadcast, so no checkpoint sits beside
+    * it). Above the bound the cover is checkpointed instead, computing
+    * it a second time. */
   private def prepareCore(spark: SparkSession, areas: Dataset[AdminArea],
-      p: Params): (Dataset[AdminArea], Dataset[CoverRowEx], DataFrame) = {
+      p: Params): (Dataset[AdminArea], Dataset[CoverRowEx], CoverInfo, DataFrame) = {
     val complete = areas.filter(_.complete).cache()
-    val cover = AdminAreas.coverTableDetailed(spark, complete, p.coverMaxLevel)
-      .localCheckpoint() // materialize: read many times (levels + join)
+    val built = AdminAreas.coverTableDetailed(spark, complete, p.coverMaxLevel)
+    val info = coverInfoOf(built, p.coverBroadcastMaxRows)
+    val cover = info.index.fold(built.localCheckpoint())(coverView(spark, _))
     val polygons = complete.select(col("relationId").as("relation_id"), col("rings"))
       .localCheckpoint()
-    (complete, cover, polygons)
+    (complete, cover, info, polygons)
   }
 
   /** Containment-only prep — extract-style callers that never build the
     * kNN skip the centre materialization (checkpoint + count) entirely,
     * and the intermediate complete-area cache is freed immediately
-    * (both derived sets are eagerly checkpointed). */
+    * (every derived set is already materialized). Returns the cover,
+    * the polygons and the cover's [[CoverInfo]]. */
   def prepareContainment(spark: SparkSession, areas: Dataset[AdminArea],
-      p: Params = Params()): (Dataset[CoverRowEx], DataFrame) = {
-    val (complete, cover, polygons) = prepareCore(spark, areas, p)
+      p: Params = Params()): (Dataset[CoverRowEx], DataFrame, CoverInfo) = {
+    val (complete, cover, info, polygons) = prepareCore(spark, areas, p)
     complete.unpersist()
-    (cover, polygons)
+    (cover, polygons, info)
   }
 
   def prepare(spark: SparkSession, areas: Dataset[AdminArea],
       p: Params = Params()): Prepared = {
-    val (complete, cover, polygons) = prepareCore(spark, areas, p)
+    val (complete, cover, info, polygons) = prepareCore(spark, areas, p)
     val centres = centresOf(complete.toDF()).localCheckpoint()
     complete.unpersist()
-    Prepared(cover, polygons, centres, CentreIndex.of(centres),
-      coverInfoOf(cover))
+    Prepared(cover, polygons, centres, CentreIndex.of(centres), info)
   }
 
   def run(spark: SparkSession, pages: DataFrame, areas: Dataset[AdminArea],
@@ -316,10 +357,9 @@ object SpatialJoin {
 
   def run(spark: SparkSession, pages: DataFrame, prep: Prepared,
       p: Params): Outputs = {
-    val pts = geoparsedPoints(pages)
-    val joined = containmentJoin(spark, pts, prep.cover, prep.polygons, p,
-      Some(prep.coverInfo))
-    new Outputs(joined, () => knnCentres(spark, pts, prep.centreIdx, p),
+    val joined = containmentJoin(spark, pagePoints(pages), prep.cover, prep.polygons,
+      p, Some(prep.coverInfo))
+    new Outputs(joined, () => knnCentres(spark, geoparsedPoints(pages), prep.centreIdx, p),
       tiles(joined, TileZoom))
   }
 }

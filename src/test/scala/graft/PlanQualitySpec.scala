@@ -50,9 +50,41 @@ class PlanQualitySpec extends AnyFunSuite {
     val prep = SpatialJoin.prepare(spark, areas)
     val joined = SpatialJoin.run(spark, Pages.generate(spark, 1000), prep,
       SpatialJoin.Params())
+    // the small cover side rides as the kernel's broadcast index — a
+    // shuffle of it here would dominate at scale
     val plan = joined.joined.queryExecution.executedPlan.toString()
-    assert(plan.contains("BroadcastHashJoin"),
-      "small cover side must broadcast — a shuffle here would dominate at scale")
+    assert(!plan.contains("Join") && !plan.contains("Exchange"), s"plan:\n$plan")
+    assert(coverKernels(joined.joined) == Seq(prep.coverInfo.index.get.id))
+  }
+
+  private def coverKernels(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case e: graft.expr.CoverProbeExpr => e.index.id
+    }))
+
+  test("containment probe plans one kernel over the memoized cover broadcast") {
+    // within coverBroadcastMaxRows the tiles pipeline is scan → kernel
+    // explode → partial aggregate: no join, no exchange before the tile
+    // aggregate's own, no per-level ancestor explode
+    import spark.implicits._
+    val p = SpatialJoin.Params(coverMaxLevel = 11)
+    val prep = SpatialJoin.prepare(spark,
+      spark.createDataset(graft.jobs.SpatialJoinWorlds.gridAreas), p)
+    val pts = graft.jobs.SpatialJoinWorlds.gridPoints.toDF("url", "lat7", "lon7")
+    def tiles() = SpatialJoin.tiles(SpatialJoin.containmentJoin(spark, pts,
+      prep.cover, prep.polygons, p, Some(prep.coverInfo)), SpatialJoin.TileZoom)
+    val df = tiles()
+    val plan = df.queryExecution.executedPlan.toString()
+    assert(!plan.contains("Join"), s"the kernel path must be join-free:\n$plan")
+    assert("Exchange".r.findAllMatchIn(plan).size == 1 &&
+      plan.contains("Exchange hashpartitioning(t#"),
+      s"the tile aggregate's must be the only exchange:\n$plan")
+    assert(!plan.contains("cellancestorexpr") && plan.contains("coverprobeexpr"),
+      s"plan:\n$plan")
+    // one broadcast, built once per prepared cover and reused by the next call
+    val id = prep.coverInfo.index.get.id
+    assert(coverKernels(df) == Seq(id) && coverKernels(tiles()) == Seq(id))
+    assert(df.agg(sum("n_pages")).head().getLong(0) > 10000L)
   }
 
   test("geo expressions stay inside WholeStageCodegen") {

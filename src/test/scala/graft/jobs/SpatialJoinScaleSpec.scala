@@ -11,47 +11,15 @@ import graft.geo.Geom
 /** Many-polygon containment join: a 32×32 admin grid (1,024 areas,
   * multi-thousand-row cover — the regime where the polygon side is no
   * longer a toy) joined against deterministic points, pinned to the
-  * exact plain-Scala PIP oracle, with the plan asserted to stay an
-  * equi-join (broadcast or shuffled — never cartesian), and again with
+  * exact plain-Scala PIP oracle, with the plan asserted never to
+  * degrade to a cartesian or nested-loop join, and again with
   * a hot-cell cluster on the shuffled path, where AQE splits the skewed
   * join partition. */
 class SpatialJoinScaleSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private val n = 32
-  // grid cell ~0.53°, offset so rectangle edges do NOT align to cell
-  // walls (lattice-aligned edges are covered by SpatialJoinSpec)
-  private val lon0 = -171234567L
-  private val lat0 = -205678901L
-  private val step = 5300000L
-
-  private lazy val areas: Seq[AdminAreas.AdminArea] =
-    for (i <- 0 until n; j <- 0 until n) yield {
-      val lo = lon0 + i * step; val hi = lo + step - 700001L
-      val la = lat0 + j * step; val lb = la + step - 700001L
-      AdminAreas.AdminArea((i * n + j).toLong, 8, s"r$i-$j",
-        Seq(Seq(lo, la, hi, la, hi, lb, lo, lb)),
-        Some((la + lb) / 2), Some((lo + hi) / 2), complete = true)
-    }
-
-  private lazy val points: Seq[(String, Long, Long)] =
-    (0 until 20000).map { k =>
-      val h1 = k * 2654435761L
-      val h2 = k * 2971215073L
-      ("p" + k,
-        lat0 - 3000000L + Math.floorMod(h1, n * step + 6000000L),
-        lon0 - 3000000L + Math.floorMod(h2, n * step + 6000000L))
-    }
-
-  // a cluster of extra points in a ~0.01° square inside polygon (5, 7):
-  // every one lands on the same join cell, so on the shuffled path one
-  // partition carries all of them
-  private lazy val hotPoints: Seq[(String, Long, Long)] =
-    (0 until 20000).map { k =>
-      ("h" + k, lat0 + 7 * step + step / 2 + (k % 317) * 300L,
-        lon0 + 5 * step + step / 2 + (k * 7 % 331) * 300L)
-    }
+  import SpatialJoinWorlds.{gridAreas => areas, gridPoints => points, hotPoints}
 
   private object Plans extends AdaptiveSparkPlanHelper
 

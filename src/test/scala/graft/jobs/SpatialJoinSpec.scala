@@ -76,31 +76,26 @@ class SpatialJoinSpec extends AnyFunSuite {
   }
 
   test("fallback cover cells take the polygon-refine branch (lattice-adversarial)") {
-    import graft.geo.Cells
     // a square aligned to level-10 cell walls puts SW corners exactly ON
     // edges → the cover flags fallback cells, exercising the branch the
     // join skips when a cover has none
-    val c = Cells.encode(100000000L, 200000000L, 10)
-    val (lo, la, hi, lb) = Cells.bounds(c)
-    val ring = Seq(lo, la, hi + (hi - lo), la,
-      hi + (hi - lo), lb + (lb - la), lo, lb + (lb - la))
-    val area = AdminAreas.AdminArea(7L, 4, "lattice", Seq(ring),
-      Some((la + lb) / 2), Some((lo + hi) / 2), complete = true)
+    val (area, (la, lo)) = SpatialJoinWorlds.lattice
+    val (inLat, inLon) = (area.centreLat7.get, area.centreLon7.get)
     val ds = spark.createDataset(Seq(area))
     val prep = SpatialJoin.prepare(spark, ds, SpatialJoin.Params(coverMaxLevel = 12))
     assert(!prep.cover.filter(_.fallback).isEmpty,
       "this fixture must produce fallback cells or the branch is untested")
     // points: inside, outside, and exactly on the adversarial corner
     val pts = Seq(
-      ("in", (la + lb) / 2, (lo + hi) / 2),
+      ("in", inLat, inLon),
       ("corner", la, lo),
       ("out", la - 1000000L, lo - 1000000L))
       .toDF("url", "lat7", "lon7")
     val got = SpatialJoin.containmentJoin(spark, pts, prep.cover, prep.polygons,
         SpatialJoin.Params(coverMaxLevel = 12))
       .select("url").as[String].collect().toSet
-    val rings = Array(ring.toArray)
-    val expected = Seq(("in", (la + lb) / 2, (lo + hi) / 2),
+    val rings = area.rings.map(_.toArray).toArray
+    val expected = Seq(("in", inLat, inLon),
       ("corner", la, lo), ("out", la - 1000000L, lo - 1000000L))
       .filter { case (_, y, x) => Geom.pointInRings(x, y, rings) }
       .map(_._1).toSet
@@ -146,15 +141,7 @@ class SpatialJoinSpec extends AnyFunSuite {
     // round-8 way (three separate actions), on a fallback-free cover
     // (Niue at detail 17) AND a fallback-bearing one (the lattice
     // square from the adversarial test above)
-    val lattice = {
-      import graft.geo.Cells
-      val c = Cells.encode(100000000L, 200000000L, 10)
-      val (lo, la, hi, lb) = Cells.bounds(c)
-      val ring = Seq(lo, la, hi + (hi - lo), la,
-        hi + (hi - lo), lb + (lb - la), lo, lb + (lb - la))
-      spark.createDataset(Seq(AdminAreas.AdminArea(7L, 4, "lattice",
-        Seq(ring), Some((la + lb) / 2), Some((lo + hi) / 2), complete = true)))
-    }
+    val lattice = spark.createDataset(Seq(SpatialJoinWorlds.lattice._1))
     for ((prep, p) <- Seq(
         SpatialJoin.prepare(spark, areas) -> SpatialJoin.Params(),
         SpatialJoin.prepare(spark, lattice,

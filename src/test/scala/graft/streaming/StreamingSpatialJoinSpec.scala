@@ -21,7 +21,28 @@ class StreamingSpatialJoinSpec extends AnyFunSuite {
 
   test("streaming windowed tiles ≡ batch on the same pages") {
     val areas = AdminAreas.build(spark, PbfRead.read(spark, fixture))
-    val prep = SpatialJoin.prepare(spark, areas)
+    assertStreamMatchesBatch(SpatialJoin.prepare(spark, areas), "wintiles")
+  }
+
+  test("streaming windowed tiles ≡ batch over a fixture-free grid (kernel path)") {
+    // 6 × 6 rectangles with gaps over the box the page generator plants
+    // its coordinates in: the stream runs the containment kernel over
+    // the prepared cover's broadcast index in every micro-batch
+    import spark.implicits._
+    val (dLat, dLon) = ((Pages.LatHi - Pages.LatLo) / 6, (Pages.LonHi - Pages.LonLo) / 6)
+    val areas = for (i <- 0 until 6; j <- 0 until 6) yield {
+      val (la, lo) = (Pages.LatLo + i * dLat, Pages.LonLo + j * dLon)
+      val (lb, hi) = (la + dLat - dLat / 9, lo + dLon - dLon / 7)
+      AdminAreas.AdminArea(100L + 6 * i + j, 8, s"g$i-$j",
+        Seq(Seq(lo, la, hi, la, hi, lb, lo, lb)), Some((la + lb) / 2),
+        Some((lo + hi) / 2), complete = true)
+    }
+    val prep = SpatialJoin.prepare(spark, spark.createDataset(areas))
+    assert(prep.coverInfo.index.isDefined)
+    assertStreamMatchesBatch(prep, "wintiles_grid")
+  }
+
+  private def assertStreamMatchesBatch(prep: SpatialJoin.Prepared, name: String): Unit = {
     val pages = Pages.generate(spark, 20000)
     val dir = Files.createTempDirectory("graft-stream-pages").toString
     // two files → two micro-batches, so the watermark actually advances
@@ -33,9 +54,9 @@ class StreamingSpatialJoinSpec extends AnyFunSuite {
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
     val q = StreamingSpatialJoin.windowedTiles(spark, stream, prep)
       .writeStream.outputMode("append").format("memory")
-      .queryName("wintiles").trigger(Trigger.AvailableNow()).start()
+      .queryName(name).trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    val streamed = spark.sql("SELECT * FROM wintiles")
+    val streamed = spark.sql(s"SELECT * FROM $name")
     val batch = StreamingSpatialJoin.windowedTiles(spark, pages, prep)
     // append mode emits only watermark-closed windows; every emitted
     // row must match the batch computation exactly
