@@ -128,8 +128,8 @@ object CoverIndex {
 
   /** One cover partition's share of the index: its row count, levels
     * (bit l set for level l) and fallback presence, plus its rows in
-    * flat arrays — dropped (`rels == null`) once the partition alone
-    * holds more than the row bound, when no index will be built. */
+    * flat arrays — dropped (`rels == null`) once the partition holds
+    * more rows than its builder's cap. */
   final class Part(val n: Long, val levelMask: Int, val fallback: Boolean,
       val rels: Array[Long], val cells: Array[Long], val flags: Array[Byte],
       val edgeOff: Array[Int], val edges: Array[Long]) extends Serializable
@@ -176,7 +176,7 @@ object CoverIndex {
   /** The index over the rows of `parts` (none of them dropped). Rows
     * are laid out grouped by slot, so each slot's rows are one range. */
   def build(parts: Seq[Part]): CoverIndex = {
-    require(parts.forall(_.rels != null), "a cover part was dropped over the row bound")
+    require(parts.forall(_.rels != null), "a cover part was dropped over its row cap")
     val n = Math.toIntExact(parts.map(_.n).sum)
     val levels = levelsOf(parts.foldLeft(0)(_ | _.levelMask))
     // one segment per level, sized to twice its distinct cells (cell

@@ -52,10 +52,7 @@ object SpatialJoin {
     * Column pruning matters here — only (url, text) are read, never
     * html (SURVEY.md §4.2). */
   def geoparsedPoints(pages: DataFrame): DataFrame =
-    pages.select(col("url"), G.geoparse_packed(col("text")).as("p"))
-      .filter(col("p").isNotNull)
-      .select(col("url"), G.packed_lat7(col("p")).as("lat7"),
-        G.packed_lon7(col("p")).as("lon7"))
+    pagePoints(pages).filter(col("lat7").isNotNull)
 
   /** [[geoparsedPoints]] without the filter: pages with no mention keep
     * null coordinates, which the containment probe drops by itself.
@@ -75,22 +72,14 @@ object SpatialJoin {
   final case class CoverInfo(levels: Seq[Int], nRows: Long, hasFallback: Boolean,
       index: Option[Broadcast[CoverIndex]] = None)
 
-  /** One pass over `cover` (one job, the "spatial cover index" span):
-    * every partition reports its row count, levels and fallback
-    * presence, plus its rows while it holds at most `maxRows`; when the
-    * whole cover has at most `maxRows` rows they become the broadcast
-    * [[CoverIndex]]. Above the bound there is no index, and a driver
-    * holds at most one bound's worth of rows per cover partition while
-    * the pass runs. */
+  /** One pass over `cover` (the "spatial cover index" span): its
+    * [[coverParts]] give the row count, levels and fallback presence
+    * and, when the whole cover has at most `maxRows` rows, the broadcast
+    * [[CoverIndex]]. Above the bound there is no index. */
   def coverInfoOf(cover: Dataset[CoverRowEx], maxRows: Long): CoverInfo = {
     val spark = cover.sparkSession
     Obs.span(spark, "spatial cover index") {
-      val parts = cover.rdd.mapPartitions { rows =>
-        val b = new CoverIndex.PartBuilder(maxRows)
-        rows.foreach(r => b.add(r.relationId, r.cell, r.full, r.cornerInside,
-          r.fallback, r.edges))
-        Iterator(b.result())
-      }.collect().toSeq
+      val parts = coverParts(cover, maxRows)
       val n = parts.map(_.n).sum
       val index =
         if (n <= maxRows) Some(spark.sparkContext.broadcast(CoverIndex.build(parts)))
@@ -98,6 +87,32 @@ object SpatialJoin {
       CoverInfo(CoverIndex.levelsOf(parts.foldLeft(0)(_ | _.levelMask)).toSeq, n,
         parts.exists(_.fallback), index)
     }._1
+  }
+
+  /** One [[CoverIndex.Part]] per partition of `cover`, normally from
+    * one job. Each partition keeps its rows while it holds at most `maxRows / P`
+    * of them (P partitions), so the driver never receives more than
+    * `maxRows` rows in total, whatever the cover's size. Only when the
+    * whole cover is within `maxRows` but a skewed partition dropped its
+    * rows does a second job fetch the dropped partitions' rows. */
+  private[jobs] def coverParts(cover: Dataset[CoverRowEx],
+      maxRows: Long): Seq[CoverIndex.Part] = {
+    val rdd = cover.rdd
+    def partsOf(cap: Long, ids: Seq[Int]) =
+      cover.sparkSession.sparkContext.runJob(rdd, (rows: Iterator[CoverRowEx]) => {
+        val b = new CoverIndex.PartBuilder(cap)
+        rows.foreach(r => b.add(r.relationId, r.cell, r.full, r.cornerInside,
+          r.fallback, r.edges))
+        b.result()
+      }, ids).toSeq
+    val nParts = rdd.getNumPartitions
+    val first = partsOf(maxRows / math.max(nParts, 1), 0 until nParts)
+    val dropped = first.indices.filter(first(_).rels == null)
+    if (dropped.isEmpty || first.map(_.n).sum > maxRows) first
+    else {
+      val again = dropped.zip(partsOf(maxRows, dropped)).toMap
+      first.indices.map(i => again.getOrElse(i, first(i)))
+    }
   }
 
   /** The cover rows held by a broadcast [[CoverIndex]], regenerated on
@@ -312,17 +327,22 @@ object SpatialJoin {
       col("centreLat7").as("c_lat7"), col("centreLon7").as("c_lon7"))
 
   /** The polygon side of the containment join. One pass over the
-    * freshly built cover yields its [[CoverInfo]] and, within the row
-    * bound, its broadcast index, which then stands in for the cover (a
-    * view regenerated from the broadcast, so no checkpoint sits beside
-    * it). Above the bound the cover is checkpointed instead, computing
-    * it a second time. */
+    * freshly built cover, persisted by that same pass, yields its
+    * [[CoverInfo]] and, within the row bound, its broadcast index. The
+    * index then stands in for the cover (a view regenerated from the
+    * broadcast) and the persisted rows are released, so they never sit
+    * beside it; above the bound the persisted rows are the cover. */
   private def prepareCore(spark: SparkSession, areas: Dataset[AdminArea],
       p: Params): (Dataset[AdminArea], Dataset[CoverRowEx], CoverInfo, DataFrame) = {
     val complete = areas.filter(_.complete).cache()
-    val built = AdminAreas.coverTableDetailed(spark, complete, p.coverMaxLevel)
+    val built = AdminAreas.coverTableDetailed(spark, complete, p.coverMaxLevel).persist()
     val info = coverInfoOf(built, p.coverBroadcastMaxRows)
-    val cover = info.index.fold(built.localCheckpoint())(coverView(spark, _))
+    val cover = info.index match {
+      case Some(index) =>
+        built.unpersist(blocking = true)
+        coverView(spark, index)
+      case None => built
+    }
     val polygons = complete.select(col("relationId").as("relation_id"), col("rings"))
       .localCheckpoint()
     (complete, cover, info, polygons)

@@ -72,6 +72,40 @@ class ContainmentKernelSpec extends AnyFunSuite {
     assert(rows(gridP.copy(coverBroadcastMaxRows = 0L)) == rows(gridP))
   }
 
+  private def keptRows(parts: Seq[graft.geo.CoverIndex.Part]): Long =
+    parts.map(pt => if (pt.rels == null) 0L else pt.rels.length.toLong).sum
+
+  test("a cover over the bound in partitions each under it ships at most the bound") {
+    val n = gridPrep.cover.count()
+    val split = gridPrep.cover.repartition(4)
+    val maxRows = n / 2
+    val sizes = split.rdd.mapPartitions(it => Iterator(it.size)).collect()
+    assert(sizes.length == 4 && sizes.forall(_ <= maxRows) && sizes.sum == n)
+    val parts = SpatialJoin.coverParts(split, maxRows)
+    assert(parts.map(_.n).sum == n)
+    assert(keptRows(parts) <= maxRows)
+    val info = SpatialJoin.coverInfoOf(split, maxRows)
+    assert(info.index.isEmpty && info.nRows == n)
+    assert(info.levels == gridPrep.coverInfo.levels)
+  }
+
+  test("a skewed cover within the bound still gets its whole index") {
+    // every row in one of four partitions: over that partition's share
+    // of the bound, so a second job fetches it
+    val n = gridPrep.cover.count()
+    val skewed = gridPrep.cover.repartition(4, lit(0))
+    assert(skewed.rdd.mapPartitions(it => Iterator(it.size)).collect().sorted.toSeq ==
+      Seq(0, 0, 0, n.toInt))
+    assert(keptRows(SpatialJoin.coverParts(skewed, n)) == n)
+    val info = SpatialJoin.coverInfoOf(skewed, n)
+    assert(info.nRows == n && info.index.isDefined)
+    def rowSet(rows: Iterator[(Long, graft.geo.Cover.CoverCellEx)]) =
+      rows.map { case (rel, c) => (rel, c.cell, c.full, c.cornerInside, c.fallback,
+        c.edges.toSeq) }.toSeq.groupBy(identity).map { case (r, rs) => r -> rs.length }
+    assert(rowSet(info.index.get.value.rows(0, 1)) ==
+      rowSet(gridPrep.coverInfo.index.get.value.rows(0, 1)))
+  }
+
   test("lattice fallback cover, corner point included: kernel ≡ shuffled join") {
     val (area, (la, lo)) = lattice
     val p = SpatialJoin.Params(coverMaxLevel = 12)
